@@ -10,8 +10,10 @@ user binaries (see SURVEY.md). This package provides:
 - ``sources``     — text/csv/json/parquet readers + single-file sink
                     (reference parity: final.txt concat, ControlServiceImpl.java:397-427).
 - ``compat``      — the MapReduce-compat job API: ``run_job`` (Python
-                    callables) and ``pipe_job`` (stdin/stdout binaries via
-                    RDD.pipe; reference contract cpp/worker/src/mapreduce/mapper.cc:45-103).
+                    callables over Arrow batches: mapInArrow map ->
+                    repartition by key -> mapInArrow reduce, lazy) and
+                    ``pipe_job`` (stdin/stdout binaries via RDD.pipe;
+                    reference contract cpp/worker/src/mapreduce/mapper.cc:45-103).
 - ``operators``   — DataFrame-native operator library: joins (as-of/range),
                     dedup (exact/minhash/simhash/jaccard), similarity search,
                     text analysis, top-k windows.

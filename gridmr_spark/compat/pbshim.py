@@ -25,8 +25,9 @@ Two subtleties discovered the hard way:
   ``_pbshim_path/sitecustomize.py``: putting that directory on
   ``PYTHONPATH`` makes every Python worker the JVM forks run the bootstrap
   at interpreter startup (the stdlib ``site`` module imports
-  ``sitecustomize`` from ``sys.path``). ``ensure_protobuf()`` wires both:
-  the current process immediately, future workers via the environment.
+  ``sitecustomize`` from ``sys.path``; it also installs
+  ``compat/zipcache.py``). ``ensure_protobuf()`` wires both: the current
+  process immediately, future workers via the environment.
 
 This is a compatibility seam for THIS container, not a vendored copy —
 nothing is copied into the repo; on any normally-provisioned cluster
@@ -117,36 +118,13 @@ def _bootstrap_current_process() -> bool:
 
 def ensure_protobuf() -> bool:
     """Bootstrap the current process AND export the shim to future Python
-    workers. Two channels, because the JVM may already be running:
-
-    - os.environ PYTHONPATH: covers workers of any SparkSession whose JVM
-      starts AFTER this call (the session factory calls this pre-build).
-    - SparkContext.environment of the ACTIVE context, if any: PySpark
-      captures this dict into every subsequently-created Python function's
-      envVars, and the worker factory merges that PYTHONPATH into the
-      worker's — which covers the driver-gate scenario where an outside
-      harness built the session before importing this repo.
-
-    Idempotent."""
+    workers (``session.export_worker_path``: the environment of a JVM not
+    started yet and the active SparkContext's, if any). Idempotent."""
     ok = _bootstrap_current_process()
-    if not ok or not os.path.isfile(os.path.join(_SHIM_PATH_DIR, "sitecustomize.py")):
-        return ok
-    parts = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-    if _SHIM_PATH_DIR not in parts:
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            [p for p in parts if p] + [_SHIM_PATH_DIR]
-        )
-    try:
-        from pyspark import SparkContext
+    if ok and os.path.isfile(os.path.join(_SHIM_PATH_DIR, "sitecustomize.py")):
+        # Imported here, not at module level: workers load this file by path
+        # at interpreter startup, where gridmr_spark may not be importable.
+        from gridmr_spark.session import export_worker_path
 
-        sc = SparkContext._active_spark_context
-        if sc is not None:
-            cur = sc.environment.get("PYTHONPATH", "")
-            sc_parts = [p for p in cur.split(os.pathsep) if p]
-            if _SHIM_PATH_DIR not in sc_parts:
-                sc.environment["PYTHONPATH"] = os.pathsep.join(
-                    sc_parts + [_SHIM_PATH_DIR]
-                )
-    except Exception:  # pragma: no cover - never break a caller over this
-        pass
+        export_worker_path(_SHIM_PATH_DIR)
     return ok

@@ -10,7 +10,35 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# The directory that holds the ``gridmr_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def export_worker_path(path: str) -> None:
+    """Append ``path`` to the PYTHONPATH of Spark's Python workers.
+
+    Two channels, because the JVM may already be running:
+
+    - os.environ PYTHONPATH: covers workers of any SparkSession whose JVM
+      starts AFTER this call (``get_spark`` calls this pre-build).
+    - SparkContext.environment of the ACTIVE context, if any: PySpark
+      captures this dict into every subsequently-created Python function's
+      envVars, and the worker factory merges that PYTHONPATH into the
+      worker's — which covers an outside harness that built the session
+      before importing this package.
+
+    Idempotent."""
+    parts = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if path not in parts:
+        os.environ["PYTHONPATH"] = os.pathsep.join(parts + [path])
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc_parts = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if path not in sc_parts:
+            sc.environment["PYTHONPATH"] = os.pathsep.join(sc_parts + [path])
 
 
 def get_spark(app_name: str = "gridmr_spark", cpus: int | None = None) -> SparkSession:
@@ -48,6 +76,9 @@ def get_spark(app_name: str = "gridmr_spark", cpus: int | None = None) -> SparkS
     from gridmr_spark.compat.pbshim import ensure_protobuf
 
     ensure_protobuf()
+    # Python workers unpickle ``gridmr_spark`` functions by reference, so
+    # they must import the package whatever the driver's working directory.
+    export_worker_path(_PACKAGE_PARENT)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -6,8 +6,15 @@ from __future__ import annotations
 
 import os
 import stat
+import subprocess
+import sys
 import textwrap
+import time
+from collections import Counter
 
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gridmr_spark.compat import (
@@ -53,6 +60,153 @@ def test_run_job_key_colocation(spark):
     for k, pid in parse_tab_kv(r.value for r in out.collect()):
         seen.setdefault(k, set()).add(int(pid))
     assert all(len(pids) == 1 for pids in seen.values()), seen
+
+
+def _contract_model(lines: list[str]) -> list[str]:
+    """Pure-Python GridMR contract for a mapper that splits its line on
+    ``|``: each piece has its trailing newlines stripped, pieces without a
+    tab are dropped, and the survivors reach the reducers unchanged."""
+    kept = (piece.rstrip("\n") for line in lines for piece in line.split("|"))
+    return [kv for kv in kept if "\t" in kv]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    lines=st.lists(
+        st.lists(st.text(alphabet="ab\t\n", max_size=6), min_size=1, max_size=4).map("|".join),
+        max_size=25,
+    ),
+    n_reducers=st.integers(1, 4),
+)
+def test_run_job_matches_contract_model(spark, lines, n_reducers):
+    """Tabless lines dropped, first tab splits, trailing newlines stripped,
+    each key in exactly one reducer partition, output = UNION ALL of the
+    reducer outputs."""
+
+    def tag_with_partition(it):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for line in it:
+            yield f"{pid}|{line}"
+
+    src = spark.createDataFrame([(line,) for line in lines], "value string")
+    out = run_job(spark, src, lambda line: line.split("|"), tag_with_partition, n_reducers)
+    tagged = [r.value.split("|", 1) for r in out.collect()]
+    assert Counter(line for _, line in tagged) == Counter(_contract_model(lines))
+    pids_by_key: dict[str, set[int]] = {}
+    for pid, line in tagged:
+        pids_by_key.setdefault(line.split("\t", 1)[0], set()).add(int(pid))
+    assert all(len(p) == 1 and p <= set(range(n_reducers)) for p in pids_by_key.values())
+
+
+def test_run_job_one_reduce_call_across_arrow_batches(spark):
+    """A reducer partition larger than one Arrow batch is still ONE
+    reduce_fn call over the whole stream, and output longer than one
+    output batch comes back whole."""
+    n = 25_000
+    per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    assert n > 2 * per_batch  # the partition must span several input batches
+    src = spark.range(n).selectExpr("concat('k', CAST(id % 7 AS STRING), '\t1') AS kv")
+
+    def echo_and_count(it):
+        seen = 0
+        for line in it:
+            seen += 1
+            yield line
+        yield f"__lines__\t{seen}"
+
+    rows = [r.value for r in run_job(spark, src, lambda line: [line], echo_and_count, 1).collect()]
+    assert [r for r in rows if r.startswith("__lines__")] == [f"__lines__\t{n}"]
+    assert len(rows) == n + 1
+
+
+def _wordcount_inputs(spark, tmp_path):
+    text = ["Hello world", "hello Spark", "", "WORLD of spark"]
+    path = tmp_path / "input.txt"
+    path.write_text("\n".join(text) + "\n")
+    return {
+        "path": str(path),
+        "dataframe": spark.createDataFrame([(t,) for t in text], ["text"]),
+        "rdd": spark.sparkContext.parallelize(text),
+    }
+
+
+def test_run_job_input_forms(spark, tmp_path):
+    expected = {"hello": 2, "world": 2, "spark": 2, "of": 1}
+    for form, source in _wordcount_inputs(spark, tmp_path).items():
+        out = run_job(spark, source, wordcount_map, wordcount_reduce, n_reducers=3)
+        assert {k: int(v) for k, v in parse_tab_kv(r.value for r in out.collect())} == expected, form
+    two_cols = spark.createDataFrame([("a b", "c")], ["x", "y"])
+    with pytest.raises(ValueError, match="exactly one"):
+        run_job(spark, two_cols, wordcount_map, wordcount_reduce)
+
+
+def test_run_job_is_lazy_and_leaves_session_conf_alone(spark, tmp_path):
+    """Building the job DataFrame launches no Spark job (no schema
+    inference) and changes no session conf; the caller's action runs it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    conf_before = dict(spark.conf.getAll)
+    try:
+        sc.setJobGroup("run_job_build", "build only")
+        built = [
+            run_job(spark, source, wordcount_map, wordcount_reduce, n_reducers=2)
+            for source in _wordcount_inputs(spark, tmp_path).values()
+        ]
+        sc.setJobGroup("run_job_action", "collect")
+        assert len(built[0].collect()) == 4
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # Listener events arrive in order: once the action's jobs are visible,
+    # any job started while building would be too.
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("run_job_action") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("run_job_action")
+    assert tracker.getJobIdsForGroup("run_job_build") == []
+    assert dict(spark.conf.getAll) == conf_before
+
+
+def test_workers_import_package_from_any_cwd(tmp_path, sf_smoke):
+    """A driver started outside the checkout, with the checkout only on its
+    own sys.path (not on PYTHONPATH), can still run jobs whose Python
+    workers unpickle gridmr_spark functions: run_job's word count and a
+    mapInPandas registry query."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""\
+        import sys
+        sys.path.insert(0, {repo!r})
+        from gridmr_spark import get_spark
+        from gridmr_spark.compat import parse_tab_kv, run_job, wordcount_map, wordcount_reduce
+        from gridmr_spark.queries import load_all
+
+        spark = get_spark("foreign_cwd", cpus=2)
+        src = spark.sparkContext.parallelize(["to be or", "not to be"])
+        out = run_job(spark, src, wordcount_map, wordcount_reduce, n_reducers=2)
+        counts = {{k: int(v) for k, v in parse_tab_kv(r.value for r in out.collect())}}
+        assert counts == {{"to": 2, "be": 2, "or": 1, "not": 1}}, counts
+        assert load_all()["text_bpe_tokenize"].fn(spark, {sf_smoke!r}).count() > 0
+        spark.stop()
+        print("FOREIGN_CWD_OK")
+        """
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.realpath(p) != os.path.realpath(repo)
+    )
+    # Files, not pipes: the script's Spark JVM inherits them, and reading a
+    # pipe to its end would also wait for that JVM to exit.
+    out_path, err_path = tmp_path / "stdout.txt", tmp_path / "stderr.txt"
+    with open(out_path, "w") as out, open(err_path, "w") as err:
+        subprocess.run(
+            [sys.executable, "-c", script], cwd=tmp_path, env=env,
+            stdout=out, stderr=err, timeout=300,
+        )
+    assert "FOREIGN_CWD_OK" in out_path.read_text(), err_path.read_text()[-3000:]
 
 
 def test_pipe_job_with_real_executables(spark, tmp_path):
