@@ -12,7 +12,7 @@ user binaries (see SURVEY.md). This package provides:
 - ``compat``      — the MapReduce-compat job API: ``run_job`` (Python
                     callables over Arrow batches: mapInArrow map ->
                     repartition by key -> mapInArrow reduce, lazy) and
-                    ``pipe_job`` (stdin/stdout binaries via RDD.pipe;
+                    ``pipe_job`` (stdin/stdout binaries on the same pipeline;
                     reference contract cpp/worker/src/mapreduce/mapper.cc:45-103).
 - ``operators``   — DataFrame-native operator library: joins (as-of/range),
                     dedup (exact/minhash/simhash/jaccard), similarity search,

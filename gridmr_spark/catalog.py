@@ -86,13 +86,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # above, so the ntz→ltz cast is value-preserving, purely a type change.
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register every table as a temp view so spark.sql() queries run
-    against the same parquet the DuckDB oracle sees."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)

@@ -15,35 +15,38 @@ that contract bug-for-bug while running on Spark's shuffle:
 - Output is the UNION ALL of reducer outputs (final.txt concat,
   ControlServiceImpl.java:397-427); order across partitions is undefined,
   matching the reference's nondeterministic output order.
-- ``pipe_job`` runs actual executables over stdin/stdout via RDD.pipe —
-  the literal binary contract (mapper.cc:45-103), minus the
-  compile-on-worker step (ship prebuilt binaries via sc.addFile).
 
-``run_job`` is a lazy DataFrame pipeline with declared schemas, so no job
-infers a schema and the map stage runs once, under the caller's action:
-``read.text`` -> ``mapInArrow`` mapper (one call per line) ->
-``repartition(R, key)`` (an explicit count AQE never coalesces) ->
-``mapInArrow`` reducer (one call per partition, over all its Arrow batches).
-Map tasks follow Spark's file-split packing, not one task per file: 8 x 1 MiB
-shards become 4 map tasks at ``local[4]``.
+Both entry points are one lazy DataFrame pipeline with declared schemas, so
+the map stage runs once, under the caller's action: ``read.text`` ->
+``mapInArrow`` map -> ``repartition(R, key)`` (an explicit count AQE never
+coalesces) -> ``mapInArrow`` reduce, each stage one call per partition over
+its whole line stream. ``run_job`` maps with a Python callable per line;
+``pipe_job`` pipes each partition through an executable — the literal binary
+contract (mapper.cc:45-103), minus the compile-on-worker step (ship prebuilt
+binaries via sc.addFile). Map tasks follow Spark's file-split packing: 8 x
+1 MiB shards become 4 map tasks at ``local[4]``.
 
 Only key CO-LOCATION is contractual, not bucket assignment: GridMR uses
 impl-defined std::hash (SURVEY.md §7.2 explicitly rejects reproducing it),
-so ``run_job`` uses Spark's Murmur3 and ``pipe_job`` Python's portable_hash.
+so both entry points use Spark's Murmur3.
 """
 
 from __future__ import annotations
 
-import itertools
+import shlex
+import subprocess
+import tempfile
 from collections.abc import Callable, Iterable, Iterator
+from functools import partial
+from itertools import chain, islice
 
 import pyarrow as pa
 from pyspark.rdd import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Reducer output lines per Arrow batch handed back to the JVM.
-_REDUCE_BATCH_LINES = 10_000
+# Output lines per Arrow batch handed back to the JVM.
+_BATCH_LINES = 10_000
 
 
 def parse_tab_kv(lines: Iterable[str]) -> Iterator[tuple[str, str]]:
@@ -74,12 +77,54 @@ def _as_lines_df(spark: SparkSession, source: DataFrame | RDD | str) -> DataFram
     return source
 
 
-def _as_lines_rdd(spark: SparkSession, source: DataFrame | RDD | str) -> RDD:
-    if isinstance(source, str):
-        return spark.sparkContext.textFile(source)
-    if isinstance(source, RDD):
-        return source
-    return _as_lines_df(spark, source).rdd.map(lambda r: r[0])
+def _line_stage(fn: Callable[[Iterator[str]], Iterable[str]]):
+    """A ``mapInArrow`` function that runs ``fn`` once per partition: the
+    partition's batches become one line stream (GridMR's per-split stdin,
+    A4/A9) and ``fn``'s output lines go back in 10k-line batches."""
+
+    def stage(batches):
+        lines = chain.from_iterable(_pylist(b.column(0)) for b in batches)
+        out = iter(fn(lines))
+        while chunk := list(islice(out, _BATCH_LINES)):
+            yield pa.RecordBatch.from_arrays([pa.array(chunk, pa.string())], ["value"])
+
+    return stage
+
+
+def _job(spark, source, map_part, reduce_part, n_reducers: int) -> DataFrame:
+    """The one GridMR dataflow; ``map_part`` and ``reduce_part`` each take a
+    partition's line stream to output lines. Map output keeps only
+    ``key\tvalue`` lines, trailing newlines stripped (mapper.cc:87-90)."""
+
+    def keyed(lines):
+        for kv in map_part(lines):
+            kv = kv.rstrip("\n")
+            if "\t" in kv:
+                yield kv
+
+    # An explicit-count repartition guarantees key co-location (A5) and is
+    # not coalesced by AQE; values stay unsorted (A8).
+    return (
+        _as_lines_df(spark, source)
+        .mapInArrow(_line_stage(keyed), "value string")
+        .repartition(max(1, n_reducers), F.substring_index("value", "\t", 1))
+        .mapInArrow(_line_stage(reduce_part), "value string")
+    )
+
+
+def _pipe(cmd: str, lines: Iterable[str]) -> Iterator[str]:
+    """Stream one partition through ``cmd`` (GridMR's per-split popen,
+    mapper.cc:74), which inherits the worker's environment. Its stdin is the
+    partition spooled to a temp file, as GridMR materializes a split before
+    piping it, so the child need not read it all. A non-zero exit fails."""
+    with tempfile.TemporaryFile() as spool:
+        spool.writelines(str(line).rstrip("\n").encode() + b"\n" for line in lines)
+        spool.seek(0)
+        with subprocess.Popen(shlex.split(cmd), stdin=spool, stdout=subprocess.PIPE) as proc:
+            for out in proc.stdout:
+                yield out.decode().rstrip("\n")
+    if proc.returncode:
+        raise RuntimeError(f"{cmd!r} exited with code {proc.returncode}")
 
 
 def run_job(
@@ -97,30 +142,8 @@ def run_job(
     Returns DataFrame[value: string] = UNION ALL of reducer outputs. Lazy:
     no Spark job runs until the caller's action.
     """
-    def _map(batches):
-        for batch in batches:
-            out = []
-            for line in _pylist(batch.column(0)):
-                for kv in map_fn(line):
-                    kv = kv.rstrip("\n")
-                    if "\t" in kv:  # tabless lines are dropped (mapper.cc:87-90)
-                        out.append(kv)
-            yield pa.RecordBatch.from_arrays([pa.array(out, pa.string())], ["line"])
-
-    def _reduce(batches):
-        lines = itertools.chain.from_iterable(_pylist(b.column(0)) for b in batches)
-        out = iter(reduce_fn(lines))
-        while chunk := list(itertools.islice(out, _REDUCE_BATCH_LINES)):
-            yield pa.RecordBatch.from_arrays([pa.array(chunk, pa.string())], ["value"])
-
-    # An explicit-count repartition guarantees key co-location (A5) and is
-    # not coalesced by AQE; values stay unsorted (A8).
-    return (
-        _as_lines_df(spark, source)
-        .mapInArrow(_map, "line string")
-        .repartition(max(1, n_reducers), F.substring_index("line", "\t", 1))
-        .mapInArrow(_reduce, "value string")
-    )
+    flat_map = lambda lines: chain.from_iterable(map(map_fn, lines))  # noqa: E731
+    return _job(spark, source, flat_map, reduce_fn, n_reducers)
 
 
 def pipe_job(
@@ -131,15 +154,12 @@ def pipe_job(
     n_reducers: int = 4,
 ) -> DataFrame:
     """Run a GridMR job with actual executables over the stdin/stdout pipe
-    contract (A3/A4/A9 parity). Commands run once per partition; stdout
-    lines are parsed with the same tab codec. Ship binaries to executors
+    contract (A3/A4/A9 parity): each command runs once per partition
+    (``shlex``-split, no shell) on the same skeleton and with the same tab
+    codec as ``run_job``, and is just as lazy. Ship binaries to executors
     with spark.sparkContext.addFile + SparkFiles.get when not on a shared FS.
     """
-    lines = _as_lines_rdd(spark, source)
-    kv = lines.pipe(map_cmd).mapPartitions(parse_tab_kv)
-    partitioned = kv.partitionBy(max(1, n_reducers))
-    out = partitioned.map(lambda kvp: f"{kvp[0]}\t{kvp[1]}").pipe(reduce_cmd)
-    return out.map(lambda line: (line,)).toDF(["value"])
+    return _job(spark, source, partial(_pipe, map_cmd), partial(_pipe, reduce_cmd), n_reducers)
 
 
 def wordcount_map(line: str) -> Iterator[str]:

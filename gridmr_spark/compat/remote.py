@@ -28,8 +28,8 @@ executed remotely:
 Parameter mapping (reference -> here):
 - input_uris          -> the read glob(s)
 - n_reducers          -> reducer partition count (hash co-location kept)
-- map/reduce_bin_uri  -> 'wordcount' builtin, or an executable URI piped
-                         via RDD.pipe exactly like the local CLI
+- map/reduce_bin_uri  -> 'wordcount' builtin; binaries are refused (run
+                         them with the local CLI, compat.pipe_job)
 - desired_maps        -> spark.sql.files.maxPartitionBytes-derived hint
 - group_partitioning  -> single-key-per-reducer contract (A5)
 - min_workers         -> no-op: Connect clusters autoscale; recorded
@@ -234,6 +234,20 @@ def _parse_sc_url(remote_url: str) -> tuple[str, int]:
     return host, int(port)
 
 
+def _split_bytes(req: SubmitRequest, ignored: dict) -> int | None:
+    """The split size (maxPartitionBytes) that stands in for desired_maps:
+    total input bytes / desired_maps, at least 4 MiB. A remote store's size
+    isn't visible from the client, so there the hint is recorded in
+    ``ignored`` and None is returned rather than a guess."""
+    if req.desired_maps is None:
+        return None
+    total = _local_input_bytes(req.input_uris)
+    if not total:
+        ignored["desired_maps"] = req.desired_maps
+        return None
+    return max(4 * 1024 * 1024, -(-total // req.desired_maps))
+
+
 def _delegated_submit(remote_url: str, req: SubmitRequest, ignored: dict) -> dict:
     """Ship the job's SQL over real gRPC from the bundled interpreter —
     submit_job's transport when THIS interpreter has no grpcio. The job id
@@ -242,13 +256,7 @@ def _delegated_submit(remote_url: str, req: SubmitRequest, ignored: dict) -> dic
     job handle, HttpJobServer.java:48-82, with the generation moved
     client-side)."""
     host, port = _parse_sc_url(remote_url)
-    mpb = None
-    if req.desired_maps is not None:
-        total = _local_input_bytes(req.input_uris)
-        if total is not None and total > 0:
-            mpb = max(4 * 1024 * 1024, -(-total // req.desired_maps))
-        else:
-            ignored["desired_maps"] = req.desired_maps
+    mpb = _split_bytes(req, ignored)
     job_id = str(uuid.uuid4())
     import pyspark
 
@@ -337,17 +345,17 @@ def submit_job(remote_url: str, transport: str = "auto", **form) -> dict:
         raise ValueError(f"transport: must be auto|grpc|delegated, got {transport!r}")
     req = parse_submit_request(form)
     if not (req.map_bin_uri == "wordcount" and req.reduce_bin_uri == "wordcount"):
-        # Spark Connect ships only the DataFrame/SQL surface — RDD.pipe
-        # (the binary stdin/stdout contract, compat/mapreduce.pipe_job)
-        # does not exist over the wire. Binary jobs go through classic
-        # submit against the same cluster (spark-submit / Livy), which is
+        # The binaries are client-local paths, which a Connect server's
+        # executors cannot run (compat/mapreduce.pipe_job runs them where
+        # the executors see the client's files). Binary jobs go through
+        # classic submit against the same cluster (spark-submit / Livy),
         # the honest mapping of the reference's "ship a .cc to workers"
-        # model anyway; declarative jobs are what Connect is FOR.
+        # model; declarative jobs are what Connect is FOR.
         raise ValueError(
-            "map_bin_uri/reduce_bin_uri: Spark Connect carries declarative "
-            "plans only — binary pipe jobs need classic submit "
-            "(gridmr-submit CLI via spark-submit); builtin 'wordcount' is "
-            "the Connect-expressible demo job"
+            "map_bin_uri/reduce_bin_uri: a Spark Connect server's executors "
+            "cannot run client-local binaries — binary pipe jobs need "
+            "classic submit (gridmr-submit CLI via spark-submit); builtin "
+            "'wordcount' is the Connect-expressible demo job"
         )
     if transport == "delegated" or (transport == "auto" and not _grpc_importable()):
         if not delegated_available():
@@ -371,24 +379,13 @@ def submit_job(remote_url: str, transport: str = "auto", **form) -> dict:
     # silently inherit this job's split size.
     _MPB = "spark.sql.files.maxPartitionBytes"
     prior_mpb: str | None = None
-    mpb_set = False
-    if req.desired_maps is not None:
-        # The reference's desired_maps picks the map-task count; Spark's
-        # lever is the split size. Derive it from the total input bytes
-        # when the URIs are locally statable (file: / bare paths); a
-        # remote store's size isn't visible from the client, so there the
-        # hint is recorded as ignored rather than silently misapplied.
-        total = _local_input_bytes(req.input_uris)
-        if total is not None and total > 0:
-            per_split = max(4 * 1024 * 1024, -(-total // req.desired_maps))
-            try:
-                prior_mpb = spark.conf.get(_MPB)
-            except Exception:
-                prior_mpb = None
-            spark.conf.set(_MPB, str(per_split))
-            mpb_set = True
-        else:
-            ignored["desired_maps"] = req.desired_maps
+    per_split = _split_bytes(req, ignored)
+    if per_split is not None:
+        try:
+            prior_mpb = spark.conf.get(_MPB)
+        except Exception:
+            prior_mpb = None
+        spark.conf.set(_MPB, str(per_split))
 
     try:
         text = sources.read_text(spark, ",".join(req.input_uris))
@@ -400,7 +397,7 @@ def submit_job(remote_url: str, transport: str = "auto", **form) -> dict:
         ).repartition(req.n_reducers)
         out.write.mode("overwrite").text(req.output_uri)
     finally:
-        if mpb_set:
+        if per_split is not None:
             if prior_mpb is None:
                 spark.conf.unset(_MPB)
             else:

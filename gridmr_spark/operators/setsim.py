@@ -96,15 +96,6 @@ def _tid_postings(sh: DataFrame, order: str) -> DataFrame:
     return sh.join(dic, "shingle").select("id", "tid", "ord1")
 
 
-def _prefix_postings(
-    sh: DataFrame, tau_num: int, tau_den: int, order: str
-) -> DataFrame:
-    """The prefix postings of each document's shingle set under a fixed
-    global token order — the first ``sz - ceil(tau*sz) + 1`` tokens —
-    keyed by numeric tid (see ``_tid_postings``). Returns (id, tid)."""
-    return _prefix_of(_tid_postings(sh, order), tau_num, tau_den)
-
-
 def _prefix_of(shn: DataFrame, tau_num: int, tau_den: int) -> DataFrame:
     """Prefix selection over already-tid-keyed postings (id, tid, ord1)."""
     w = Window.partitionBy("id").orderBy(F.asc("ord1"), F.asc("tid"))

@@ -5,6 +5,7 @@ word count and the DataFrame-native flagship query."""
 from __future__ import annotations
 
 import os
+import re
 import stat
 import subprocess
 import sys
@@ -15,6 +16,7 @@ from collections import Counter
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from gridmr_spark.compat import (
@@ -62,14 +64,31 @@ def test_run_job_key_colocation(spark):
     assert all(len(pids) == 1 for pids in seen.values()), seen
 
 
-def _contract_model(lines: list[str]) -> list[str]:
-    """Pure-Python GridMR contract for a mapper that splits its line on
-    ``|``: each piece has its trailing newlines stripped, pieces without a
-    tab are dropped, and the survivors reach the reducers unchanged."""
-    kept = (piece.rstrip("\n") for line in lines for piece in line.split("|"))
+def _contract_model(lines: list[str], split) -> list[str]:
+    """Pure-Python GridMR contract for a mapper that cuts each line into
+    pieces with ``split``: each piece has its trailing newlines stripped,
+    pieces without a tab are dropped, and the survivors reach the reducers
+    unchanged."""
+    kept = (piece.rstrip("\n") for line in lines for piece in split(line))
     return [kv for kv in kept if "\t" in kv]
 
 
+# Each entry point with an identity reducer, a mapper, and how that
+# mapper cuts a line. The callable splits on ``|``; ``cat`` copies the line
+# into a byte stream, where its inner newlines end lines.
+_ENTRY_POINTS = {
+    "run_job": (
+        lambda spark, src, n: run_job(spark, src, lambda line: line.split("|"), iter, n),
+        lambda line: line.split("|"),
+    ),
+    "pipe_job": (
+        lambda spark, src, n: pipe_job(spark, src, "cat", "cat", n),
+        lambda line: line.rstrip("\n").split("\n"),
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_ENTRY_POINTS))
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
     lines=st.lists(
@@ -78,25 +97,18 @@ def _contract_model(lines: list[str]) -> list[str]:
     ),
     n_reducers=st.integers(1, 4),
 )
-def test_run_job_matches_contract_model(spark, lines, n_reducers):
+def test_job_matches_contract_model(spark, entry, lines, n_reducers):
     """Tabless lines dropped, first tab splits, trailing newlines stripped,
     each key in exactly one reducer partition, output = UNION ALL of the
-    reducer outputs."""
-
-    def tag_with_partition(it):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        for line in it:
-            yield f"{pid}|{line}"
-
+    reducer outputs — for both entry points."""
+    build, split = _ENTRY_POINTS[entry]
     src = spark.createDataFrame([(line,) for line in lines], "value string")
-    out = run_job(spark, src, lambda line: line.split("|"), tag_with_partition, n_reducers)
-    tagged = [r.value.split("|", 1) for r in out.collect()]
-    assert Counter(line for _, line in tagged) == Counter(_contract_model(lines))
+    out = build(spark, src, n_reducers).select(F.spark_partition_id().alias("pid"), "value")
+    rows = out.collect()
+    assert Counter(r.value for r in rows) == Counter(_contract_model(lines, split))
     pids_by_key: dict[str, set[int]] = {}
-    for pid, line in tagged:
-        pids_by_key.setdefault(line.split("\t", 1)[0], set()).add(int(pid))
+    for r in rows:
+        pids_by_key.setdefault(r.value.split("\t", 1)[0], set()).add(r.pid)
     assert all(len(p) == 1 and p <= set(range(n_reducers)) for p in pids_by_key.values())
 
 
@@ -142,18 +154,20 @@ def test_run_job_input_forms(spark, tmp_path):
         run_job(spark, two_cols, wordcount_map, wordcount_reduce)
 
 
-def test_run_job_is_lazy_and_leaves_session_conf_alone(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["run_job", "pipe_job"])
+def test_job_is_lazy_and_leaves_session_conf_alone(spark, tmp_path, entry):
     """Building the job DataFrame launches no Spark job (no schema
     inference) and changes no session conf; the caller's action runs it."""
+    build = {
+        "run_job": lambda src: run_job(spark, src, wordcount_map, wordcount_reduce, 2),
+        "pipe_job": lambda src: pipe_job(spark, src, r"sed 's/$/\t1/'", "cat", 2),
+    }[entry]
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     conf_before = dict(spark.conf.getAll)
     try:
         sc.setJobGroup("run_job_build", "build only")
-        built = [
-            run_job(spark, source, wordcount_map, wordcount_reduce, n_reducers=2)
-            for source in _wordcount_inputs(spark, tmp_path).values()
-        ]
+        built = [build(source) for source in _wordcount_inputs(spark, tmp_path).values()]
         sc.setJobGroup("run_job_action", "collect")
         assert len(built[0].collect()) == 4
     finally:
@@ -209,9 +223,9 @@ def test_workers_import_package_from_any_cwd(tmp_path, sf_smoke):
     assert "FOREIGN_CWD_OK" in out_path.read_text(), err_path.read_text()[-3000:]
 
 
-def test_pipe_job_with_real_executables(spark, tmp_path):
-    """The literal stdin/stdout binary contract via RDD.pipe: a shell mapper
-    emitting `word\t1` and a python reducer accumulating a hash map."""
+def _wordcount_executables(tmp_path):
+    """A shell mapper emitting `word\t1` and the command of a python reducer
+    accumulating a hash map."""
     mapper = tmp_path / "map.sh"
     mapper.write_text(
         '#!/bin/sh\ntr "[:upper:]" "[:lower:]" | tr -cs "a-z0-9" "\\n" | '
@@ -238,12 +252,59 @@ def test_pipe_job_with_real_executables(spark, tmp_path):
     )
     for p in (mapper, reducer):
         os.chmod(p, os.stat(p).st_mode | stat.S_IXUSR)
+    return str(mapper), f"python3 {reducer}"
+
+
+def test_pipe_job_with_real_executables(spark, tmp_path):
+    """The literal stdin/stdout binary contract: a shell mapper and a python
+    reducer, each run once per partition."""
+    mapper, reducer = _wordcount_executables(tmp_path)
     data = spark.createDataFrame(
         [("Hello world hello",), ("WORLD of spark",)], ["value"]
     )
-    out = pipe_job(spark, data, str(mapper), f"python3 {reducer}", n_reducers=2)
+    out = pipe_job(spark, data, mapper, reducer, n_reducers=2)
     counts = {k: int(v) for k, v in parse_tab_kv(r.value for r in out.collect())}
     assert counts == {"hello": 2, "world": 2, "of": 1, "spark": 1}
+
+
+def test_pipe_job_empty_reducer_output(spark):
+    """Reducers that emit nothing give an empty result. Each reducer
+    partition (~250 KB) is larger than a pipe buffer, and ``true`` reads
+    none of it: a child that exits 0 early is a success."""
+    src = spark.range(100_000).selectExpr("concat('k', CAST(id % 97 AS STRING), '\t1') AS v")
+    assert pipe_job(spark, src, "cat", "true", n_reducers=4).collect() == []
+
+
+@pytest.mark.parametrize(
+    ("map_cmd", "code"), [("false", 1), ("sh -c 'cat; exit 3'", 3)], ids=["silent", "partial"]
+)
+def test_pipe_job_failing_mapper_fails_the_action(spark, map_cmd, code):
+    """A mapper's non-zero exit fails the action with an error naming the
+    command and its code, also when the mapper printed lines first."""
+    src = spark.createDataFrame([("a\t1",), ("b\t2",)], "value string")
+    with pytest.raises(PythonException, match=re.escape(f"{map_cmd!r} exited with code {code}")):
+        pipe_job(spark, src, map_cmd, "cat", n_reducers=2).collect()
+
+
+def test_submit_cli_in_process(spark, tmp_path, monkeypatch):
+    """The gridmr-submit CLI end to end on the test session: split, pipe
+    through a shell mapper and a python reducer, one final.txt-style part.
+    Leaves the session conf as it found it."""
+    from gridmr_spark.compat import cli
+
+    mapper, reducer = _wordcount_executables(tmp_path)
+    inp = tmp_path / "input.txt"
+    inp.write_text("Hello world hello\n\nWORLD of spark\nto be or not to be\n")
+    out = tmp_path / "out"
+    monkeypatch.setattr("gridmr_spark.session.get_spark", lambda app_name: spark)
+    conf_before = dict(spark.conf.getAll)
+    argv = [mapper, reducer, str(inp), str(out), "--reducers", "3", "--single-file"]
+    assert cli.main(argv) == 0
+    parts = [p for p in out.iterdir() if p.name.startswith("part-")]
+    assert len(parts) == 1
+    counts = {k: int(v) for k, v in parse_tab_kv(parts[0].read_text().splitlines())}
+    assert counts == Counter(re.findall(r"[a-z0-9]+", inp.read_text().lower()))
+    assert dict(spark.conf.getAll) == conf_before
 
 
 def test_sources_roundtrip(spark, tmp_path):
@@ -424,8 +485,8 @@ class TestRemoteSubmit:
                 parse_submit_request({**base, **bad})
 
     def test_binary_jobs_refused_over_connect(self):
-        """RDD.pipe does not exist over Spark Connect; the wrapper must say
-        so instead of failing deep inside a session."""
+        """A Connect server's executors cannot run client-local binaries;
+        the wrapper must say so instead of failing deep inside a session."""
         import pytest
 
         from gridmr_spark.compat.remote import submit_job
