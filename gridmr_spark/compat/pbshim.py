@@ -119,12 +119,13 @@ def _bootstrap_current_process() -> bool:
 def ensure_protobuf() -> bool:
     """Bootstrap the current process AND export the shim to future Python
     workers (``session.export_worker_path``: the environment of a JVM not
-    started yet and the active SparkContext's, if any). Idempotent."""
-    ok = _bootstrap_current_process()
-    if ok and os.path.isfile(os.path.join(_SHIM_PATH_DIR, "sitecustomize.py")):
-        # Imported here, not at module level: workers load this file by path
-        # at interpreter startup, where gridmr_spark may not be importable.
-        from gridmr_spark.session import export_worker_path
+    started yet and the active SparkContext's, if any). The shim is
+    exported even when no runtime resolves: its ``sitecustomize`` also
+    installs the zip-cache fix, and guards its own protobuf bootstrap.
+    Idempotent."""
+    # Imported here, not at module level: workers load this file by path at
+    # interpreter startup, where gridmr_spark may not be importable.
+    from gridmr_spark.session import export_worker_path
 
-        export_worker_path(_SHIM_PATH_DIR)
-    return ok
+    export_worker_path(_SHIM_PATH_DIR)
+    return _bootstrap_current_process()

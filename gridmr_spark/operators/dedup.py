@@ -65,6 +65,21 @@ def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     )
 
 
+def shingle_halves(
+    old: DataFrame, new: DataFrame, id_col: str, text_col: str, n: int = 3
+) -> list[DataFrame]:
+    """[sh_old, sh_new]: the materialized (id, shingle) tables of two
+    corpora. The halves are independent jobs, so they materialize
+    concurrently — the second's tasks back-fill the first's straggler
+    tail (optimization guide §2.6)."""
+    from gridmr_spark.operators.parallel import run_parallel
+
+    return run_parallel(
+        lambda: word_shingles(old, id_col, text_col, n).localCheckpoint(eager=True),
+        lambda: word_shingles(new, id_col, text_col, n).localCheckpoint(eager=True),
+    )
+
+
 def _shingle_sizes(sh: DataFrame) -> DataFrame:
     """|distinct shingles| per doc, aggregated from the exploded shingle
     table. Deliberately NOT a per-row size(array_distinct(...)) projection:
@@ -75,6 +90,26 @@ def _shingle_sizes(sh: DataFrame) -> DataFrame:
     the quadratic expression twice. Aggregating `sh` reuses work the join
     already does, with map-side combine."""
     return sh.groupBy("id").agg(F.count("*").alias("sz"))
+
+
+def _jaccard_at_least(
+    common: DataFrame, sizes1: DataFrame, sizes2: DataFrame, threshold: float
+) -> DataFrame:
+    """(id1, id2, jaccard) for the rows of ``common`` (id1, id2, c = |A∩B|)
+    with jaccard = c / (sz1 + sz2 - c) >= threshold; ``sizes1``/``sizes2``
+    are the (id, sz) shingle counts of the id1 and id2 sides."""
+    s1 = sizes1.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
+    s2 = sizes2.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
+    return (
+        common.join(s1, "id1")
+        .join(s2, "id2")
+        .select(
+            "id1",
+            "id2",
+            (F.col("c").cast("double") / (F.col("sz1") + F.col("sz2") - F.col("c")).cast("double")).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -120,20 +155,7 @@ def jaccard_pairs(
         .groupBy("id1", "id2")
         .agg(F.count("*").alias("c"))
     )
-    s1 = sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-    return (
-        common.join(s1, "id1")
-        .join(s2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (F.col("c").cast("double") / (F.col("sz1") + F.col("sz2") - F.col("c")).cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_at_least(common, sizes, sizes, threshold)
 
 
 def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -197,7 +219,12 @@ def lsh_candidate_pairs(sig: DataFrame, k: int = 64, bands: int = 16) -> DataFra
     """Band the signature and equi-join on (band, band_hash): docs agreeing
     on all rows of any band become candidates. rows_per_band = k/bands tunes
     the precision/recall tradeoff (16 bands × 4 rows ≈ s-curve at j≈0.5)."""
-    stacked = _stacked_bands(sig, k, bands)
+    return _band_self_join(_stacked_bands(sig, k, bands))
+
+
+def _band_self_join(stacked: DataFrame) -> DataFrame:
+    """Distinct (id1, id2) pairs, id1 < id2, of docs sharing a
+    (band_id, band_hash) bucket of an (id, band_id, band_hash) table."""
     other = stacked.select(
         F.col("id").alias("id2"), F.col("band_id"), F.col("band_hash")
     )
@@ -234,23 +261,13 @@ def minhash_dedup_incremental(
     # Each half tokenizes ONCE (materialized), feeding its signature pass
     # and its verify-join leg — in production the old half is a precomputed
     # artifact and this checkpoint is a table read. Callers that already
-    # hold the (id, shingle) tables pass them via sh_old/sh_new (MUST be
+    # hold the (id, shingle) tables pass BOTH via sh_old/sh_new (MUST be
     # materialized) so a composition like the nightly pipeline shingles
     # each half exactly once across all its stages.
-    if sh_old is None and sh_new is None:
-        # The two halves are independent jobs — materialize them
-        # concurrently so the second's tasks back-fill the first's
-        # straggler tail (same overlap the nightly pipelines use).
-        from gridmr_spark.operators.parallel import run_parallel
-
-        sh_old, sh_new = run_parallel(
-            lambda: word_shingles(old, id_col, text_col, n).localCheckpoint(eager=True),
-            lambda: word_shingles(new, id_col, text_col, n).localCheckpoint(eager=True),
-        )
+    if (sh_old is None) != (sh_new is None):
+        raise ValueError("pass both sh_old and sh_new, or neither")
     if sh_old is None:
-        sh_old = word_shingles(old, id_col, text_col, n).localCheckpoint(eager=True)
-    if sh_new is None:
-        sh_new = word_shingles(new, id_col, text_col, n).localCheckpoint(eager=True)
+        sh_old, sh_new = shingle_halves(old, new, id_col, text_col, n)
     sig_old = minhash_signatures_from_shingles(sh_old, k)
     sig_new = minhash_signatures_from_shingles(sh_new, k)
     a = _stacked_bands(sig_old, k, bands).select(
@@ -285,18 +302,7 @@ def minhash_dedup_incremental(
         .groupBy("id1", "id2")
         .agg(F.count("*").alias("c"))
     )
-    s1 = _shingle_sizes(sh_old).select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-    s2 = _shingle_sizes(sh_new).select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-    return (
-        common.join(s1, "id1")
-        .join(s2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (F.col("c").cast("double") / (F.col("sz1") + F.col("sz2") - F.col("c")).cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_at_least(common, _shingle_sizes(sh_old), _shingle_sizes(sh_new), threshold)
 
 
 def minhash_dedup_pairs(
@@ -346,18 +352,7 @@ def verify_jaccard_pairs(sh: DataFrame, cand: DataFrame, threshold: float) -> Da
         .groupBy("id1", "id2")
         .agg(F.count("*").alias("c"))
     )
-    s1 = sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-    return (
-        common.join(s1, "id1")
-        .join(s2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (F.col("c").cast("double") / (F.col("sz1") + F.col("sz2") - F.col("c")).cast("double")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_at_least(common, sizes, sizes, threshold)
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str, n_bits: int = 64, hash_col=None) -> DataFrame:

@@ -19,12 +19,6 @@ Scale notes (100 TB posture):
   the plan doubles per iteration and the driver OOMs planning round ~15.
 - The convergence probe is a ``limit(1).count()`` on the changed-labels
   frame — one cheap action per round, no data to the driver.
-- For web-scale graphs with high-diameter components, use
-  ``connected_components_two_phase`` below — the large-star/small-star
-  algorithm (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", SoCC'14), same interface, O(log n) rounds; min-label (with
-  pointer jumping) stays the default for dedup graphs where components are
-  near-cliques with diameter ~2.
 """
 
 from __future__ import annotations
@@ -327,98 +321,3 @@ def pagerank(
         ranks = ranks.localCheckpoint()
     return ranks
 
-
-def connected_components_two_phase(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round alternative to min-label propagation for
-    adversarial high-diameter graphs. Same contract as
-    ``connected_components``; that one stays the default for dedup graphs
-    (near-cliques converge in 2-3 propagation rounds with less work per
-    round).
-
-    Round shape: each star operation is ONE groupBy over the symmetrized
-    neighborhood (computing each node's minimum neighbor) followed by an
-    edge rewrite — no joins at all, so a round costs two shuffles on the
-    node key regardless of structure. Convergence: the edge multiset stops
-    changing; checked with a cheap count+min aggregate fingerprint (exact
-    stability detection would need a full anti-join; the fingerprint is a
-    standard practical proxy and the iteration cap backstops it).
-    """
-    # Work on undirected edges as (u, v); keep self-loops out.
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _nbrs(frame: DataFrame) -> DataFrame:
-        return frame.unionAll(
-            frame.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    def _large_star(frame: DataFrame) -> DataFrame:
-        # For each u: m = min(Γ(u) ∪ {u}); connect every LARGER neighbor to m.
-        nb = _nbrs(frame)
-        m = nb.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        out = (
-            nb.where(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return out.localCheckpoint()
-
-    def _small_star(frame: DataFrame) -> DataFrame:
-        # For each u: m = min over SMALLER neighbors ∪ {u}; connect those
-        # smaller neighbors AND u itself to m.
-        nb = _nbrs(frame)
-        smaller = nb.where(F.col("v") < F.col("u"))
-        m = smaller.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        rewired = smaller.join(m, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-        self_edge = m.select(F.col("u"), F.col("m").alias("v"))
-        out = (
-            rewired.unionAll(self_edge)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return out.localCheckpoint()
-
-    def _star(frame: DataFrame, large: bool) -> DataFrame:
-        return _large_star(frame) if large else _small_star(frame)
-
-    prev_fp = None
-    for _ in range(max_iter):
-        e = _star(e, large=True)
-        e = _star(e, large=False)
-        fp = e.agg(
-            F.count("*"), F.coalesce(F.sum(F.col("u") + F.col("v")), F.lit(0))
-        ).collect()[0]
-        fp = (fp[0], fp[1])
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-
-    # After convergence every surviving edge is (node, component-min).
-    comp = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    # Re-attach isolated vertices (they lost all edges or never had any).
-    v = vertices.select(F.col(id_col).alias("id"))
-    return (
-        v.join(comp, "id", "left")
-        .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
-        .groupBy("id")
-        .agg(F.min("component").alias("component"))
-    )

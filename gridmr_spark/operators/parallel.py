@@ -8,9 +8,12 @@ sets, pair searches) with eager ``localCheckpoint`` calls — running those
 from a small thread pool lets the next job's tasks back-fill executors
 freed by the current job's tail instead of idling through it.
 
-Default FIFO scheduling is exactly the back-fill behaviour wanted here;
-job groups/descriptions are thread-local, so each thunk may label its own
-jobs without clobbering siblings.
+Default FIFO scheduling is exactly the back-fill behaviour wanted here.
+Job groups/descriptions are thread-local; each thunk starts with its own
+copy of the caller's (one ``inheritable_thread_target`` per thunk: the
+wrapper clones the properties once, and every function it wraps shares
+that clone), so its jobs carry the caller's label, and a thunk that sets
+its own leaves its siblings' alone.
 """
 
 from __future__ import annotations
@@ -18,6 +21,9 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
@@ -33,6 +39,7 @@ def run_parallel(*thunks: Callable[[], T]) -> list[T]:
     """
     if len(thunks) == 1:
         return [thunks[0]()]
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
+        futures = [ex.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         return [f.result() for f in futures]

@@ -111,6 +111,18 @@ def _prefix_of(shn: DataFrame, tau_num: int, tau_den: int) -> DataFrame:
     )
 
 
+def _prefix_candidates(prefix: DataFrame) -> DataFrame:
+    """Distinct (id1, id2), id1 < id2, of docs whose prefixes share a token:
+    the self equi-join of the (id, tid) prefix postings."""
+    return (
+        prefix.select(F.col("id").alias("id1"), "tid")
+        .join(prefix.select(F.col("id").alias("id2"), "tid"), "tid")
+        .where(F.col("id1") < F.col("id2"))
+        .select("id1", "id2")
+        .distinct()
+    )
+
+
 def candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -125,14 +137,7 @@ def candidate_pairs(
     is measurable (tests assert df-ascending <= hash-order candidates)."""
     sh = word_shingles(df, id_col, text_col, n)
     shn = _tid_postings(sh, order).localCheckpoint(eager=True)
-    prefix = _prefix_of(shn, tau_num, tau_den)
-    return (
-        prefix.select(F.col("id").alias("id1"), "tid")
-        .join(prefix.select(F.col("id").alias("id2"), "tid"), "tid")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
+    return _prefix_candidates(_prefix_of(shn, tau_num, tau_den))
 
 
 def prefix_filter_pairs(
@@ -182,14 +187,7 @@ def prefix_filter_pairs(
     # join via it, per-doc sets) — materialize once; the shingle string
     # is gone from here on (narrow longs only).
     shn = _tid_postings(sh, order).localCheckpoint(eager=True)
-    prefix = _prefix_of(shn, tau_num, tau_den)
-    cand = (
-        prefix.select(F.col("id").alias("id1"), "tid")
-        .join(prefix.select(F.col("id").alias("id2"), "tid"), "tid")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
+    cand = _prefix_candidates(_prefix_of(shn, tau_num, tau_den))
     sets = shn.groupBy("id").agg(
         F.sort_array(F.collect_list("tid")).alias("toks"),
         F.count("*").cast("long").alias("sz"),

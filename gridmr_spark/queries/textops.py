@@ -1609,6 +1609,16 @@ FROM r GROUP BY a
 """
 
 
+def _with_representative(cc: DataFrame) -> DataFrame:
+    """(doc_id, component, is_representative) from a components frame
+    (id, component): the min id of each cluster represents it."""
+    return cc.select(
+        F.col("id").alias("doc_id"),
+        "component",
+        (F.col("id") == F.col("component")).cast("int").alias("is_representative"),
+    )
+
+
 @query("dedup_minhash_clusters", oracle=_MINHASH_CC_ORACLE)
 def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION dedup pipeline end-to-end over the full documents
@@ -1631,137 +1641,34 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id"), pairs.select("id1", "id2"),
         id_col="doc_id", src_col="id1", dst_col="id2",
     )
-    return cc.select(
-        F.col("id").alias("doc_id"),
-        "component",
-        (F.col("id") == F.col("component")).cast("int").alias("is_representative"),
-    )
+    return _with_representative(cc)
 
 
-@query("dedup_incremental_clusters", oracle=_MINHASH_CC_ORACLE)
-def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental CLUSTER maintenance (operators/graph.py:
-    incremental_components): the even-id half plays yesterday's corpus
-    with its components already assigned (a prior full run); the odd-id
-    half is today's ingest. The day's pairs (bipartite old x new from
-    `minhash_dedup_incremental` plus new x new) recluster only AFFECTED
-    components via quotient-graph contraction — CC runs on a graph of
-    O(day's pairs) supernodes, and untouched components' rows pass
-    through a broadcast relabel join unshuffled (plan asserted in
-    tests/test_graph_incremental.py). The oracle is the FULL recompute
-    over all documents (same recursive closure as dedup_minhash_clusters)
-    — hash equality proves the incremental shortcut is exact, not
-    approximately right."""
-    from gridmr_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
+def _incremental_day(spark: SparkSession, sf_dir: str, on_prior=None):
+    """The nightly incremental-dedup day both incremental cluster queries
+    run: the even-id half of documents is yesterday's corpus, the odd-id
+    half today's ingest. Returns (new, prior, day_pairs):
 
+    - prior: yesterday's components (id, component), from old x old
+      MinHash pairs + connected components; ``on_prior(prior)`` runs on
+      it inside the same driver thread (the pipeline commits it there);
+    - day_pairs: the day's (id1, id2) edges, bipartite old x new from
+      `minhash_dedup_incremental` plus new x new, materialized.
+
+    Each half is shingled exactly ONCE for all three pair searches
+    (word_shingles is deterministic, so the output is identical; at
+    100 TB this is the contract that lets the old half be a precomputed
+    artifact). The halves materialize concurrently, as do the prior build
+    and the day's pair searches (guide §2.6 back-fill)."""
+    from gridmr_spark.operators.graph import connected_components
     from gridmr_spark.operators.parallel import run_parallel
 
     docs = load_table(spark, sf_dir, "documents")
     old = docs.where(F.col("doc_id") % 2 == 0)
     new = docs.where(F.col("doc_id") % 2 == 1)
-    # Shingle each half exactly ONCE for all three pair searches (prior
-    # old x old, bipartite old x new, new x new) — the same sharing the
-    # nightly pipeline below already does. Identical output by
-    # construction (word_shingles is deterministic); saves two full
-    # tokenize+shingle+explode passes per run (guide §1.2 step 1: don't
-    # compute things twice). The two halves are independent jobs, so they
-    # materialize concurrently (guide §2.6 back-fill), as do the prior
-    # old x old pair search + CC and the day's pair searches below.
-    sh_old, sh_new = run_parallel(
-        lambda: dedup_ops.word_shingles(old, "doc_id", "text", 3).localCheckpoint(eager=True),
-        lambda: dedup_ops.word_shingles(new, "doc_id", "text", 3).localCheckpoint(eager=True),
-    )
+    sh_old, sh_new = dedup_ops.shingle_halves(old, new, "doc_id", "text", 3)
 
     def _prior():
-        pairs = dedup_ops.minhash_dedup_pairs(
-            old, "doc_id", "text", n=3, k=64, bands=16, threshold=0.5, sh=sh_old
-        )
-        return connected_components(
-            old.select("doc_id"), pairs.select("id1", "id2"),
-            id_col="doc_id", src_col="id1", dst_col="id2",
-        )
-
-    def _day():
-        # Materialized ONCE: incremental_components reads its edge frame
-        # from several consumers (endpoint probe, contraction, relabel) —
-        # an uncheckpointed day_pairs would re-run the bipartite verify
-        # join per consumer.
-        return (
-            dedup_ops.minhash_dedup_incremental(
-                old, new, "doc_id", "text", n=3, k=64, bands=16, threshold=0.5,
-                sh_old=sh_old, sh_new=sh_new,
-            )
-            .select("id1", "id2")
-            .union(
-                dedup_ops.minhash_dedup_pairs(
-                    new, "doc_id", "text", n=3, k=64, bands=16, threshold=0.5, sh=sh_new
-                ).select("id1", "id2")
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    prior, day_pairs = run_parallel(_prior, _day)
-    updated = incremental_components(
-        prior, new.select(F.col("doc_id").alias("id")),
-        day_pairs, src_col="id1", dst_col="id2",
-    )
-    return updated.select(
-        F.col("id").alias("doc_id"),
-        "component",
-        (F.col("id") == F.col("component")).cast("int").alias("is_representative"),
-    )
-
-
-@query("pipeline_incremental_dedup_table", oracle=_MINHASH_CC_ORACLE)
-def pipeline_incremental_dedup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of nightly dedup-state maintenance, end to
-    end: day-0's cluster assignment lives in a ManifestTable; day-1's
-    ingest produces pairs (`minhash_dedup_incremental` bipartite +
-    new x new); `incremental_components(changed_only=True)` emits ONLY
-    the rows whose label changed (new docs + members of merged
-    components — day-sized by the broadcast relabel construction); and
-    `merge_by_key` upserts exactly that bounded set into the table as
-    one atomic, time-travelable snapshot. The read-back state is the
-    query output, and the oracle is the FULL recompute over all
-    documents — one hash row therefore proves the whole composition:
-    incremental reclustering is exact AND the bounded write-back loses
-    nothing. Yesterday's state stays readable at the prior version (the
-    audit trail a data-governance review wants). At 100 TB: the pair
-    search is banded, the recluster is day-sized, the table rewrite is
-    copy-on-write bounded by partitioning — no stage rescans history."""
-    import shutil as _sh
-
-    from gridmr_spark.operators.graph import (
-        connected_components,
-        incremental_components,
-    )
-    from gridmr_spark.queries.sources_io import _scratch
-    from gridmr_spark.sources.table_format import ManifestTable
-
-    docs = load_table(spark, sf_dir, "documents")
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-    # Shingle each half exactly ONCE for the whole composition: the prior
-    # pair build, the bipartite day search, and the new x new search all
-    # reuse the two materialized tables. Measured ~neutral at sf0.1 (the
-    # three LSH+verify stages dominate and each checkpointed its own
-    # shingles anyway), but at 100 TB the old half is a precomputed
-    # artifact and this is the contract that lets it be one (stage
-    # profile: shingle 3.1s / pair searches 9.3s / CC+recluster 5.3s).
-    from gridmr_spark.operators.parallel import run_parallel
-
-    sh_old, sh_new = run_parallel(
-        lambda: dedup_ops.word_shingles(old, "doc_id", "text", 3).localCheckpoint(eager=True),
-        lambda: dedup_ops.word_shingles(new, "doc_id", "text", 3).localCheckpoint(eager=True),
-    )
-    root = _scratch(sf_dir, "dedup_state")
-    _sh.rmtree(root, ignore_errors=True)
-    t = ManifestTable(root)
-
-    def _commit_prior():
         pairs = dedup_ops.minhash_dedup_pairs(
             old, "doc_id", "text", n=3, k=64, bands=16, threshold=0.5, sh=sh_old
         )
@@ -1769,7 +1676,8 @@ def pipeline_incremental_dedup_table(spark: SparkSession, sf_dir: str) -> DataFr
             old.select("doc_id"), pairs.select("id1", "id2"),
             id_col="doc_id", src_col="id1", dst_col="id2",
         )
-        t.commit(prior)  # v1: day-0 state
+        if on_prior is not None:
+            on_prior(prior)
         return prior
 
     def _day():
@@ -1791,20 +1699,69 @@ def pipeline_incremental_dedup_table(spark: SparkSession, sf_dir: str) -> DataFr
             .localCheckpoint(eager=True)
         )
 
-    # Day-0 build+commit and the day's pair searches are independent
-    # sub-pipelines — overlap them (guide §2.6).
-    _prior, day_pairs = run_parallel(_commit_prior, _day)
+    prior, day_pairs = run_parallel(_prior, _day)
+    return new, prior, day_pairs
+
+
+@query("dedup_incremental_clusters", oracle=_MINHASH_CC_ORACLE)
+def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental CLUSTER maintenance (operators/graph.py:
+    incremental_components): the even-id half plays yesterday's corpus
+    with its components already assigned (a prior full run); the odd-id
+    half is today's ingest. The day's pairs (bipartite old x new from
+    `minhash_dedup_incremental` plus new x new) recluster only AFFECTED
+    components via quotient-graph contraction — CC runs on a graph of
+    O(day's pairs) supernodes, and untouched components' rows pass
+    through a broadcast relabel join unshuffled (plan asserted in
+    tests/test_graph_incremental.py). The oracle is the FULL recompute
+    over all documents (same recursive closure as dedup_minhash_clusters)
+    — hash equality proves the incremental shortcut is exact, not
+    approximately right."""
+    from gridmr_spark.operators.graph import incremental_components
+
+    new, prior, day_pairs = _incremental_day(spark, sf_dir)
+    updated = incremental_components(
+        prior, new.select(F.col("doc_id").alias("id")),
+        day_pairs, src_col="id1", dst_col="id2",
+    )
+    return _with_representative(updated)
+
+
+@query("pipeline_incremental_dedup_table", oracle=_MINHASH_CC_ORACLE)
+def pipeline_incremental_dedup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION shape of nightly dedup-state maintenance, end to
+    end: day-0's cluster assignment lives in a ManifestTable; day-1's
+    ingest produces pairs (`minhash_dedup_incremental` bipartite +
+    new x new); `incremental_components(changed_only=True)` emits ONLY
+    the rows whose label changed (new docs + members of merged
+    components — day-sized by the broadcast relabel construction); and
+    `merge_by_key` upserts exactly that bounded set into the table as
+    one atomic, time-travelable snapshot. The read-back state is the
+    query output, and the oracle is the FULL recompute over all
+    documents — one hash row therefore proves the whole composition:
+    incremental reclustering is exact AND the bounded write-back loses
+    nothing. Yesterday's state stays readable at the prior version (the
+    audit trail a data-governance review wants). At 100 TB: the pair
+    search is banded, the recluster is day-sized, the table rewrite is
+    copy-on-write bounded by partitioning — no stage rescans history."""
+    import shutil as _sh
+
+    from gridmr_spark.operators.graph import incremental_components
+    from gridmr_spark.queries.sources_io import _scratch
+    from gridmr_spark.sources.table_format import ManifestTable
+
+    root = _scratch(sf_dir, "dedup_state")
+    _sh.rmtree(root, ignore_errors=True)
+    t = ManifestTable(root)
+    # v1, the day-0 state, commits in the prior build's thread, so it
+    # overlaps the day's pair searches.
+    new, _prior, day_pairs = _incremental_day(spark, sf_dir, on_prior=t.commit)
     changed = incremental_components(
         t.read(spark), new.select(F.col("doc_id").alias("id")),
         day_pairs, src_col="id1", dst_col="id2", changed_only=True,
     )
     t.merge_by_key(spark, changed, key="id")  # v2: day-1 state, bounded write
-    state = t.read(spark)
-    return state.select(
-        F.col("id").alias("doc_id"),
-        "component",
-        (F.col("id") == F.col("component")).cast("int").alias("is_representative"),
-    )
+    return _with_representative(t.read(spark))
 
 
 # ---------------------------------------------------------------------------

@@ -42,7 +42,9 @@ def export_worker_path(path: str) -> None:
 
 
 def get_spark(app_name: str = "gridmr_spark", cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) the tuned session.
+    """Build the tuned session, or return the one already running in this
+    process untouched: its conf, app name and log level stay as they are
+    (only the worker paths below are exported to it).
 
     Settings rationale (scale posture, SURVEY.md §7.1 step 7):
     - AQE + coalescePartitions + skewJoin: runtime re-planning is the main
@@ -79,6 +81,8 @@ def get_spark(app_name: str = "gridmr_spark", cpus: int | None = None) -> SparkS
     # Python workers unpickle ``gridmr_spark`` functions by reference, so
     # they must import the package whatever the driver's working directory.
     export_worker_path(_PACKAGE_PARENT)
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.active()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

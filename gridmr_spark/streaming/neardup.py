@@ -47,12 +47,12 @@ from pyspark.sql.streaming.stateful_processor import (
 
 from gridmr_spark.operators.dedup import (
     _MERSENNE,
+    _band_self_join,
     _perm_params,
     _shingle_idx,
     _stacked_bands,
+    minhash_dedup_pairs,
     normalize_tokens,
-    verify_jaccard_pairs,
-    word_shingles,
 )
 
 
@@ -204,13 +204,7 @@ def minhash_candidates_batch(
     b = minhash_bands_stateless(docs, id_col, text_col, n, k, bands).localCheckpoint(
         eager=True
     )
-    other = b.select(F.col("id").alias("id2"), "band_id", "band_hash")
-    return (
-        b.join(other, ["band_id", "band_hash"])
-        .where(F.col("id") < F.col("id2"))
-        .select(F.col("id").alias("id1"), "id2")
-        .distinct()
-    )
+    return _band_self_join(b)
 
 
 def neardup_flags_batch(
@@ -230,22 +224,14 @@ def neardup_flags_batch(
     exact, so output ⊆ exact pairs and (at LSH recall 1.0, which the
     oracle hash asserts on this data) the flags equal the exact-Jaccard
     definition."""
-    # Signatures via the batch AGGREGATE form (explode + 64 running minima
-    # in one whole-stage-codegen hash agg), not the row-local array form:
-    # the two are bit-identical (tests/test_stream_neardup.py proves
-    # candidate-set equality), and the aggregate form measures ~5x faster
-    # at sf0.1 — the stateless form exists because a streaming plan cannot
-    # contain the groupBy, not because it is the better batch plan.
-    from gridmr_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures_from_shingles,
-    )
-
-    sh = word_shingles(docs, id_col, text_col, n).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(
-        minhash_signatures_from_shingles(sh, k), k, bands
-    ).localCheckpoint(eager=True)
-    pairs = verify_jaccard_pairs(sh, cand, threshold)
+    # minhash_dedup_pairs builds signatures in the batch AGGREGATE form
+    # (explode + 64 running minima in one whole-stage-codegen hash agg),
+    # not the row-local array form: the two are bit-identical
+    # (tests/test_stream_neardup.py proves candidate-set equality), and the
+    # aggregate form measures ~5x faster at sf0.1 — the stateless form
+    # exists because a streaming plan cannot contain the groupBy, not
+    # because it is the better batch plan.
+    pairs = minhash_dedup_pairs(docs, id_col, text_col, n, k, bands, threshold)
     dup = pairs.groupBy("id2").agg(F.min("id1").cast("long").alias("first_dup_of"))
     return (
         docs.select(F.col(id_col).cast("long").alias("doc_id"))

@@ -121,3 +121,75 @@ def test_incremental_minhash_is_strictly_bipartite(spark, sf_oracle):
         if (a % 2) != (b % 2)
     }
     assert {(r.id1, r.id2) for r in rows} == cut
+
+
+def _shingles3(text: str) -> set[str]:
+    import re
+
+    ws = [t for t in re.sub(r"[^a-zA-Z0-9]+", " ", text.lower()).split(" ") if t]
+    return {" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)}
+
+
+@pytest.fixture(scope="module")
+def jaccard_boundary_docs(spark):
+    """Doc 2 has 18 shingles; doc 3 shares 9 of them and has no others
+    (J = 9/18 = 0.5 exactly); doc 5 shares the same 9 plus one of its own
+    (J = 9/19, just below). Doc 4 shares nothing."""
+    base = [f"w{i}" for i in range(20)]
+    rows = [
+        (2, " ".join(base)),
+        (3, " ".join(base[:11])),
+        (4, " ".join(f"u{i}" for i in range(12))),
+        (5, " ".join(base[:11] + ["x"])),
+    ]
+    return rows, spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_jaccard_tail_at_the_threshold(jaccard_boundary_docs):
+    """The shared Jaccard tail keeps J == threshold and drops J just below
+    it, identically for the full inverted-index join and for the verify
+    stage fed every id1 < id2 pair as candidates."""
+    from pyspark.sql import functions as F
+
+    rows, docs = jaccard_boundary_docs
+    sets = {i: _shingles3(t) for i, t in rows}
+    assert len(sets[2] & sets[3]) / len(sets[2] | sets[3]) == 0.5
+    assert len(sets[2] & sets[5]) / len(sets[2] | sets[5]) == 9 / 19
+    want = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a in sets for b in sets
+        if a < b and len(sets[a] & sets[b]) / len(sets[a] | sets[b]) >= 0.5
+    }
+    assert (2, 3) in want and (2, 5) not in want
+
+    full = {(r.id1, r.id2): r.jaccard for r in dedup.jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.5).collect()}
+    sh = dedup.word_shingles(docs, "doc_id", "text", n=3).localCheckpoint(eager=True)
+    ids = sh.select("id").distinct()
+    every = ids.select(F.col("id").alias("id1")).crossJoin(
+        ids.select(F.col("id").alias("id2"))
+    ).where(F.col("id1") < F.col("id2"))
+    verified = {(r.id1, r.id2): r.jaccard for r in dedup.verify_jaccard_pairs(
+        sh, every, 0.5).collect()}
+    assert full == verified == want
+
+
+def test_incremental_shingle_tables_are_both_or_neither(jaccard_boundary_docs):
+    """minhash_dedup_incremental gives the same rows whether it shingles
+    the halves itself or is handed both tables, and refuses just one."""
+    from pyspark.sql import functions as F
+
+    rows, docs = jaccard_boundary_docs
+    old = docs.where(F.col("doc_id") % 2 == 0)
+    new = docs.where(F.col("doc_id") % 2 == 1)
+    # 32 bands of 2 rows: a J = 0.5 pair collides with probability ~1.
+    kw = dict(n=3, k=64, bands=32, threshold=0.5)
+    own = dedup.minhash_dedup_incremental(old, new, "doc_id", "text", **kw)
+    sh_old, sh_new = dedup.shingle_halves(old, new, "doc_id", "text", 3)
+    handed = dedup.minhash_dedup_incremental(
+        old, new, "doc_id", "text", sh_old=sh_old, sh_new=sh_new, **kw
+    )
+    got = sorted(map(tuple, own.collect()))
+    assert got == sorted(map(tuple, handed.collect())) == [(2, 3, 0.5)]
+    with pytest.raises(ValueError, match="both"):
+        dedup.minhash_dedup_incremental(old, new, "doc_id", "text", sh_old=sh_old, **kw)

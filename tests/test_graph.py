@@ -115,35 +115,6 @@ def test_pagerank_matches_numpy(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_two_phase_cc_matches_union_find(spark):
-    from gridmr_spark.operators.graph import connected_components_two_phase
-
-    rng = random.Random(19)
-    n = 70
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(55)]
-    vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    e = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components_two_phase(vertices, e).collect()
-    }
-    assert got == _union_find_components(n, edges)
-
-
-def test_two_phase_cc_path_graph(spark):
-    from gridmr_spark.operators.graph import connected_components_two_phase
-
-    n = 40
-    edges = [(i, i + 1) for i in range(n - 1)]
-    vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    e = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components_two_phase(vertices, e).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
-
-
 def test_sssp_weighted_dominated_by_bfs_times_maxw(spark, sf_oracle):
     """Structural laws tying the weighted walk to the unweighted one on
     the same graph: every vertex BFS reaches is reached by SSSP (same

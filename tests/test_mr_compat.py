@@ -286,17 +286,17 @@ def test_pipe_job_failing_mapper_fails_the_action(spark, map_cmd, code):
         pipe_job(spark, src, map_cmd, "cat", n_reducers=2).collect()
 
 
-def test_submit_cli_in_process(spark, tmp_path, monkeypatch):
+def test_submit_cli_in_process(spark, tmp_path):
     """The gridmr-submit CLI end to end on the test session: split, pipe
     through a shell mapper and a python reducer, one final.txt-style part.
-    Leaves the session conf as it found it."""
+    The CLI's get_spark finds the running session and leaves its conf
+    (partitions, parallelism, app name) as it found it."""
     from gridmr_spark.compat import cli
 
     mapper, reducer = _wordcount_executables(tmp_path)
     inp = tmp_path / "input.txt"
     inp.write_text("Hello world hello\n\nWORLD of spark\nto be or not to be\n")
     out = tmp_path / "out"
-    monkeypatch.setattr("gridmr_spark.session.get_spark", lambda app_name: spark)
     conf_before = dict(spark.conf.getAll)
     argv = [mapper, reducer, str(inp), str(out), "--reducers", "3", "--single-file"]
     assert cli.main(argv) == 0

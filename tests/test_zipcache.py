@@ -71,3 +71,18 @@ def test_spark_workers_run_with_the_patch(spark):
         yield getattr(zipimport.zipimporter.invalidate_caches, "_stat_checked", False)
 
     assert spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect() == [True]
+
+
+def test_shim_exported_when_protobuf_does_not_resolve(spark, monkeypatch):
+    """get_spark exports the shim directory (whose sitecustomize installs
+    this patch in workers) also on a host where no protobuf runtime
+    resolves, to future JVMs and to the running context."""
+    from gridmr_spark.compat import pbshim
+    from gridmr_spark.session import get_spark
+
+    monkeypatch.setattr(pbshim, "_bootstrap_current_process", lambda: False)
+    monkeypatch.setenv("PYTHONPATH", "")
+    monkeypatch.setitem(spark.sparkContext.environment, "PYTHONPATH", "")
+    assert get_spark() is spark
+    assert pbshim._SHIM_PATH_DIR in os.environ["PYTHONPATH"].split(os.pathsep)
+    assert pbshim._SHIM_PATH_DIR in spark.sparkContext.environment["PYTHONPATH"].split(os.pathsep)
