@@ -21,7 +21,6 @@ import argparse
 import os
 import subprocess
 import sys
-import tempfile
 
 
 def compile_if_source(cmd: str) -> str:
@@ -29,7 +28,11 @@ def compile_if_source(cmd: str) -> str:
     mirroring ensure_mapper_binary in the reference."""
     if not cmd.endswith((".cc", ".cpp")):
         return cmd
-    out = os.path.join(tempfile.mkdtemp(prefix="gridmr_bin_"), "a.out")
+    from gridmr_spark.sources import scratch_dir
+
+    out_dir = scratch_dir("bin")
+    os.makedirs(out_dir)
+    out = os.path.join(out_dir, "a.out")
     static = ["g++", "-O2", "-std=c++17", "-static", cmd, "-o", out]
     dynamic = ["g++", "-O2", "-std=c++17", cmd, "-o", out]
     if subprocess.run(static, capture_output=True).returncode != 0:
@@ -79,7 +82,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from gridmr_spark import sources
     from gridmr_spark.compat.mapreduce import pipe_job
-    from gridmr_spark.session import get_spark
+    from gridmr_spark.session import get_spark, session_conf
 
     # MR_REDUCE_BIN_URI overrides the reducer command, exactly as the
     # reference worker honors it (reducer.cc:71: envOr falls back to the
@@ -90,9 +93,13 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("gridmr_submit")
     map_cmd = resolve_binary(spark, map_cmd)
     reduce_cmd = resolve_binary(spark, reduce_cmd)
-    lines = sources.read_text(spark, args.input, chunk_mb=args.chunk_mb)
-    out = pipe_job(spark, lines, map_cmd, reduce_cmd, n_reducers=args.reducers)
-    sources.write(out, args.output, fmt="text", single_file=args.single_file)
+    conf = {}
+    if args.chunk_mb is not None:
+        conf["spark.sql.files.maxPartitionBytes"] = str(args.chunk_mb * 1024 * 1024)
+    with session_conf(spark, conf):  # the split size is this job's alone
+        lines = sources.read_text(spark, args.input)
+        out = pipe_job(spark, lines, map_cmd, reduce_cmd, n_reducers=args.reducers)
+        sources.write(out, args.output, fmt="text", single_file=args.single_file)
     print(f"job complete: {args.output}", file=sys.stderr)
     return 0
 

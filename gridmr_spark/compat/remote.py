@@ -370,24 +370,16 @@ def submit_job(remote_url: str, transport: str = "auto", **form) -> dict:
 
     from gridmr_spark import sources
     from gridmr_spark.operators.text import word_count
+    from gridmr_spark.session import session_conf
 
     ignored = dict(req.ignored)
     # desired_maps is a PER-JOB hint but spark.conf is SESSION state (the
-    # Connect session is getOrCreate'd and shared): capture the prior split
-    # size and restore it in a finally so a later submit without
-    # desired_maps — or any other workload on the same session — doesn't
-    # silently inherit this job's split size.
-    _MPB = "spark.sql.files.maxPartitionBytes"
-    prior_mpb: str | None = None
+    # Connect session is getOrCreate'd and shared): scope it to this job so
+    # a later submit, or any other workload on the session, does not
+    # inherit this job's split size.
     per_split = _split_bytes(req, ignored)
-    if per_split is not None:
-        try:
-            prior_mpb = spark.conf.get(_MPB)
-        except Exception:
-            prior_mpb = None
-        spark.conf.set(_MPB, str(per_split))
-
-    try:
+    conf = {} if per_split is None else {"spark.sql.files.maxPartitionBytes": str(per_split)}
+    with session_conf(spark, conf):
         text = sources.read_text(spark, ",".join(req.input_uris))
         counts = word_count(text.withColumnRenamed("value", "text"))
         out = counts.select(
@@ -396,12 +388,6 @@ def submit_job(remote_url: str, transport: str = "auto", **form) -> dict:
             )
         ).repartition(req.n_reducers)
         out.write.mode("overwrite").text(req.output_uri)
-    finally:
-        if per_split is not None:
-            if prior_mpb is None:
-                spark.conf.unset(_MPB)
-            else:
-                spark.conf.set(_MPB, prior_mpb)
     return {
         "job_id": spark.conf.get("spark.app.id", "connect-session"),
         "status": "completed",

@@ -23,16 +23,13 @@ extraction.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gridmr_spark.catalog import load_table
 from gridmr_spark.operators import html as H
 from gridmr_spark.queries import query
+from gridmr_spark.sources import scratch_dir
 
 def _spark_fields() -> dict:
     # built lazily: classic-mode Columns need an active SparkContext, and
@@ -135,8 +132,7 @@ def pipeline_warc_to_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gridmr_spark.sources import warc as W
 
     W.register(spark)
-    key = hashlib.md5(f"{sf_dir}:warcdocs".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"gridmr_io_warcdocs_{key}")
+    path = scratch_dir("warcdocs")
     docs = load_table(spark, sf_dir, "documents")
     (
         docs.select(

@@ -521,12 +521,15 @@ def pareto_front(df: DataFrame, maximize: str, minimize: str) -> DataFrame:
     from pyspark.sql.types import StructField, StructType
 
     g = df.groupBy(maximize).agg(F.min(minimize).alias("gmin"))
-    rows = g.collect()
+    # A null key never joins back and a null minimum dominates nothing;
+    # a row whose own minimize is null fails every comparison, so it drops.
+    rows = [r for r in g.collect() if r[maximize] is not None]
     rows.sort(key=lambda r: r[maximize], reverse=True)
     out_rows, run = [], None
     for r in rows:
         out_rows.append((r[maximize], r["gmin"], run))
-        run = r["gmin"] if run is None else min(run, r["gmin"])
+        if r["gmin"] is not None:
+            run = r["gmin"] if run is None else min(run, r["gmin"])
     schema = StructType(
         list(g.schema.fields)
         + [StructField("run_min", g.schema["gmin"].dataType, True)]

@@ -7,16 +7,13 @@ reads it back through the matching ``sources.read_*``, and returns the
 re-read rows — the oracle is the straight SQL over the original parquet, so
 a green row proves write+read is value-exact, not just "parses".
 
-Scratch output goes under the system temp dir (same convention as
-``streaming/windows.py``), keyed by sf_dir so concurrent SFs don't collide;
-``mode=overwrite`` makes repeated invocations idempotent.
+Each call writes under a fresh ``sources.scratch_dir`` path, so repeated
+or concurrent calls never share files and none outlives the process.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,11 +22,7 @@ from gridmr_spark import sources
 from gridmr_spark.catalog import load_table
 from gridmr_spark.functions.localdata import local_df
 from gridmr_spark.queries import query
-
-
-def _scratch(sf_dir: str, tag: str) -> str:
-    key = hashlib.md5(f"{sf_dir}:{tag}".encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"gridmr_io_{tag}_{key}")
+from gridmr_spark.sources import scratch_dir
 
 
 _CSV_ORACLE = """
@@ -43,7 +36,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV (directory-of-parts), read it back with an EXPLICIT schema (never
     inferSchema in production — it double-scans), return the re-read rows.
     Quoting is exercised too: n_name is free text."""
-    path = _scratch(sf_dir, "csv")
+    path = scratch_dir("csv")
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -66,7 +59,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized reader for). DuckDB cannot read ORC, so the oracle is the
     straight SQL over the ORIGINAL parquet — a green row therefore proves
     the ORC write+read is value-exact end to end, doubles included."""
-    path = _scratch(sf_dir, "orc")
+    path = scratch_dir("orc")
     supp = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", F.col("s_acctbal").cast("double").alias("s_acctbal")
     )
@@ -92,7 +85,7 @@ def source_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between reading 1/5th of the table and all of it; the same
     mechanics serve date-partitioned event logs. Value parity vs the
     unpartitioned original proves the layout round-trip loses nothing."""
-    path = _scratch(sf_dir, "part")
+    path = scratch_dir("part")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.col("o_totalprice").cast("double").alias("o_totalprice"),
         "o_orderpriority",
@@ -120,8 +113,8 @@ def layout_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan parallelism stays aligned with maxPartitionBytes. The gate proves
     the rewrite is lossless; tests/test_mr_compat.py asserts the file
     counts actually collapse."""
-    path_small = _scratch(sf_dir, "smallfiles")
-    path_compact = _scratch(sf_dir, "compacted")
+    path_small = scratch_dir("smallfiles")
+    path_compact = scratch_dir("compacted")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nation.repartition(16).write.mode("overwrite").parquet(path_small)
     small = sources.read_parquet(spark, path_small)
@@ -148,7 +141,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     take the schema of one footer for speed; merging is opt-in because it
     reads every footer — fine per-batch, priced accordingly at 100k
     files.)"""
-    p1, p2 = _scratch(sf_dir, "evo1"), _scratch(sf_dir, "evo2")
+    p1, p2 = scratch_dir("evo1"), scratch_dir("evo2")
     cust = load_table(spark, sf_dir, "customer")
     cust.where(F.col("c_custkey") < 300).select("c_custkey", "c_name").write.mode(
         "overwrite"
@@ -174,7 +167,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jackson's shortest-round-trip rendering guarantees the re-read double is
     bit-identical, which the value hash then proves. Explicit read schema,
     as JSON inference scans everything."""
-    path = _scratch(sf_dir, "json")
+    path = scratch_dir("json")
     cust = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 500).select(
         "c_custkey", "c_name", "c_mktsegment", F.col("c_acctbal").cast("double").alias("c_acctbal")
     )
@@ -307,7 +300,7 @@ def source_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     "join facts to this month's dim slice" from scanning every partition —
     no literal predicate on the fact exists to push statically. Plan
     property asserted in tests/test_plans.py."""
-    path = _scratch(sf_dir, "dpp")
+    path = scratch_dir("dpp")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_totalprice").cast("double").alias("o_totalprice"),
         "o_orderpriority",
@@ -373,7 +366,7 @@ def source_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gridmr_spark.sources import warc as W
 
     W.register(spark)
-    path = _scratch(sf_dir, "warc")
+    path = scratch_dir("warc")
     docs = load_table(spark, sf_dir, "documents")
     docs.select(
         F.concat(F.lit("http://synth.example/doc/"), F.col("doc_id")).alias("target_uri"),
@@ -401,7 +394,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically, which the value hash proves — completing the format
     family parquet/csv/json/orc/text(+http)/xml plus the custom Python
     DataSource."""
-    path = _scratch(sf_dir, "xml")
+    path = scratch_dir("xml")
     cust = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 500).select(
         "c_custkey", "c_name", "c_mktsegment", F.col("c_acctbal").cast("double").alias("c_acctbal")
     )
@@ -438,7 +431,7 @@ def layout_zonemap_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless."""
     from gridmr_spark.operators.layout import zonemap_pruned_read, zonemap_write
 
-    path = _scratch(sf_dir, "zonemap")
+    path = scratch_dir("zonemap")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.col("o_totalprice").cast("double").alias("o_totalprice")
     )
@@ -467,14 +460,11 @@ FROM orders
 
 
 def _manifest_orders_table(spark: SparkSession, sf_dir: str):
-    """Build (idempotently from scratch) a 3-version manifest table over
+    """Build a fresh 3-version manifest table over
     orders: v1 = keys % 3 == 0, v2 appends % 3 == 1, v3 appends % 3 == 2."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "mtable")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mtable")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     for m in (0, 1, 2):
@@ -657,15 +647,11 @@ def stream_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream→commit→snapshot path is row-lossless and duplicate-free.
     Restart-with-growth exactly-once is separately proven in
     tests/test_table_format.py."""
-    import shutil
-    import uuid
-
     from gridmr_spark.sources.table_format import ManifestTable
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = _scratch(sf_dir, "streamtbl")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ck, tbl = f"{base}/src", f"{base}/ck-{uuid.uuid4().hex[:8]}", f"{base}/tbl"
+    base = scratch_dir("streamtbl")
+    src, ck, tbl = f"{base}/src", f"{base}/ck", f"{base}/tbl"
     ev.write.mode("overwrite").parquet(src)
     t = ManifestTable(tbl)
 
@@ -737,14 +723,11 @@ def stream_table_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     their files are not appends (tests cover both the refusal and
     on_rewrite=skip). Restart-with-growth exactly-once is in
     tests/test_table_format.py."""
-    import shutil
-    import uuid
-
     from gridmr_spark.sources.table_format import register_changelog_source
 
     t = _manifest_orders_table(spark, sf_dir)
     register_changelog_source(spark)
-    run = _scratch(sf_dir, "chglog") + f"/run-{uuid.uuid4().hex[:8]}"
+    run = scratch_dir("chglog")
     ck, sink = f"{run}/ck", f"{run}/out"
     q = (
         spark.readStream.format("mtable_changelog")
@@ -757,14 +740,11 @@ def stream_table_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    out = (
+    return (
         spark.read.parquet(sink)
         .groupBy((F.col("o_orderkey") % 3).cast("long").alias("bucket"))
         .agg(*_cents_agg())
-        .localCheckpoint(eager=True)
     )
-    shutil.rmtree(run, ignore_errors=True)
-    return out
 
 
 _DPO_ORACLE = """
@@ -793,10 +773,7 @@ def source_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> Data
     overwrite that partition atomically-per-partition, never rewrite the
     table. The conf is set per-write via the DataFrameWriter option (no
     session-state leak — the round-7 remote.py lesson)."""
-    import shutil
-
-    path = _scratch(sf_dir, "dpo")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("dpo")
     pris = ["1-URGENT", "2-HIGH", "3-MEDIUM"]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -848,15 +825,11 @@ def stream_table_upsert_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-cardinality bounded regardless of stream volume, each refresh
     costs O(batch + |view|), and every historical refresh is a readable
     snapshot (auditable lineage of a live aggregate)."""
-    import shutil
-    import uuid
-
     from gridmr_spark.sources.table_format import ManifestTable
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    base = _scratch(sf_dir, "upsertview")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ck, tbl = f"{base}/src", f"{base}/ck-{uuid.uuid4().hex[:8]}", f"{base}/tbl"
+    base = scratch_dir("upsertview")
+    src, ck, tbl = f"{base}/src", f"{base}/ck", f"{base}/tbl"
     # several source files => availableNow may deliver multiple batches
     ev.repartition(4).write.mode("overwrite").parquet(src)
     t = ManifestTable(tbl)
@@ -971,12 +944,9 @@ def table_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping. At 100 TB this plus the residual predicate is what turns
     "scan the table" into "scan the overlapping files", with the decision
     made from one manifest JSON — zero footer I/O, zero file listing."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "mtable_stats")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mtable_stats")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     mx = orders.agg(F.max("o_orderkey")).collect()[0][0]  # bounded scalar
@@ -1023,12 +993,9 @@ def table_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     range" probes touch a handful of files instead of a full partition
     scan — and the maintenance op that builds it is itself a snapshot,
     time-travelable and concurrency-safe like every other commit."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "mtable_zorder")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mtable_zorder")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1302,12 +1269,9 @@ def table_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares the main table's immutable data/group planes, and main-table
     GC (expire/vacuum) treats branch and tag references as live
     (tests/test_table_refs.py)."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "wap")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("wap")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     t.commit(orders.where(F.col("o_orderkey") % 3 == 0))
@@ -1374,8 +1338,6 @@ def table_changefeed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the compare is bounded by the rewrites' footprint, not the table
     size; appends-only ranges keep `diff`'s O(delta) fast path. The
     downstream maintenance stays O(|feed| + |groups|)."""
-    import shutil
-
     from gridmr_spark.operators.incremental import (
         cdc_partial_aggs,
         finalize_aggs,
@@ -1384,8 +1346,7 @@ def table_changefeed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "cfeed")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cfeed")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -1448,12 +1409,9 @@ def table_changefeed_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-set delta — the appends' files plus the delete's true footprint —
     never the two full snapshots. On a 100-TB table a 0.1% delete feeds
     a compare over ~0.1% of files plus the appended deltas."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "cfrw")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cfrw")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -1504,12 +1462,9 @@ def table_bloom_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the index rides the (immutable, shared) group manifests like the
     min/max stats do. Key-clustered tables still prune GROUPS first via
     the equality-tightened range (point implies lo = hi = value)."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "bloomtbl")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("bloomtbl")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     t.commit(orders.repartition(16), bloom_cols=["o_orderkey"])
@@ -1626,12 +1581,9 @@ def table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     DV bytes; read overhead is one broadcast anti-join until the next
     rewrite/compaction naturally materializes; rewrite verbs compact the
     DV set to surviving files so counts stay exact."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "dvtbl")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("dvtbl")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     t.commit(orders)                                                   # v1
@@ -1698,16 +1650,12 @@ def stream_table_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-version stream volume is O(that version's file
     delta); a 0.1% delete streams ~0.1% of files as D plus its rewrite
     as I. Minimal-feed consumers use batch `changefeed()`."""
-    import shutil
-    import uuid
-
     from gridmr_spark.sources.table_format import (
         ManifestTable,
         register_changelog_source,
     )
 
-    base = _scratch(sf_dir, "cdcstream")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("cdcstream")
     t = ManifestTable(f"{base}/tbl")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
@@ -1721,7 +1669,7 @@ def stream_table_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.merge_by_key(spark, ups, "o_orderkey")                          # v4 planned
 
     register_changelog_source(spark)
-    sink = f"{base}/feed-{uuid.uuid4().hex[:8]}"
+    sink = f"{base}/feed"
     q = (
         spark.readStream.format("mtable_changelog")
         .option("path", t.root)
@@ -1729,7 +1677,7 @@ def stream_table_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .writeStream.outputMode("append")
         .foreachBatch(lambda df, bid: df.write.mode("append").parquet(sink))
-        .option("checkpointLocation", f"{base}/ck-{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", f"{base}/ck")
         .trigger(availableNow=True)
         .start()
     )
@@ -1774,12 +1722,9 @@ def table_compact_small(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(small-file debt) reads + writes — a nightly pass over a
     streaming-ingest table pays for the day's micro-batches, never the
     table. Full rewrite remains `compact` (z-order/global clustering)."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "binpack")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("binpack")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     t.commit(orders.where(F.col("o_orderkey") % 5 != 0).coalesce(1))  # healthy
@@ -1837,13 +1782,10 @@ def catalog_sql_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: registration is O(#tables) manifest JSON reads, zero
     data; each view is the same lazy pinned-file-list parquet plan every
     table read uses."""
-    import shutil
-
     from gridmr_spark.sources.catalog_txn import TableCatalog
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "catsql")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("catsql")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_quantity").cast("double").alias("l_quantity")
@@ -1918,13 +1860,10 @@ def table_wap_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     failed WAP costs zero data movement to undo (branches dropped,
     catalog untouched); publish is O(#tables) manifest writes + one
     exclusive catalog create."""
-    import shutil
-
     from gridmr_spark.sources.catalog_txn import TableCatalog
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "wapmulti")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("wapmulti")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_quantity").cast("double").alias("l_quantity")
@@ -2030,13 +1969,10 @@ def catalog_txn_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     harmless history (the orphan-until-referenced posture, one level up).
     Conflicts are catalog-version OCC, same retry contract as racing
     table commits (tests/test_catalog_txn.py)."""
-    import shutil
-
     from gridmr_spark.sources.catalog_txn import TableCatalog
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "cattxn")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cattxn")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_quantity").cast("double").alias("l_quantity")
@@ -2126,12 +2062,9 @@ def table_changefeed_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's add-column commit is a metadata event for the feed, not a
     rescan. Incompatible changes (type change on a shared name) still
     refuse loudly."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "cfevolve")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cfevolve")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders")
     t.commit(
@@ -2207,12 +2140,9 @@ def table_schema_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep only on the set actually read, only when the distributed
     footer merge refuses. Genuinely incompatible changes (int->string,
     decimal scale change) still refuse loudly."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "widen")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("widen")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders")
     t.commit(
@@ -2280,12 +2210,9 @@ def table_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFram
     metadata-exact (no residual row filter when every cohort is covered
     by pt_preds); compact(partition_by=...) remains the explicit
     full-rewrite verb that retires old cohorts."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "specevo")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("specevo")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders")
     t.commit(
@@ -2354,12 +2281,9 @@ def table_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     as-written stats key — old cohorts keep SKIPPING files (skip-count
     pinned in tests/test_rename_fieldids.py); never-recycled names make
     the translation collision-free."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "rename")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("rename")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders")
     t.commit(
@@ -2427,12 +2351,9 @@ def table_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: drop is O(1) metadata at any size; physical erasure of
     the dropped bytes remains the explicit compact + expire + vacuum
     two-step (same discipline as row deletes)."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "dropcol")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("dropcol")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders")
     t.commit(
@@ -2495,12 +2416,10 @@ def table_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     verb work on the adopted cohort immediately, and a later compact()
     completes ownership migration at the caller's pace."""
     import glob as _glob
-    import shutil
 
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "adopt")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("adopt")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2576,12 +2495,9 @@ def table_metadata_agg_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(#columns) JSON at answer time, and a GDPR-trickle table keeps
     millisecond COUNT/MIN/MAX answers instead of degrading to full
     scans until someone compacts."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "metadv")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("metadv")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     t.commit(orders.repartition(8))                                  # v1
@@ -2671,16 +2587,13 @@ def stream_catalog_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmoved pin costs nothing); offsets are O(1) catalog JSON reads; no
     snapshot is ever rescanned. A 100-table catalog streams as 100
     bounded aligned feeds, not one table-size rescan per flip."""
-    import shutil
-
     from gridmr_spark.sources.catalog_txn import TableCatalog
     from gridmr_spark.sources.table_format import (
         ManifestTable,
         register_changelog_source,
     )
 
-    root = _scratch(sf_dir, "catcdc")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("catcdc")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     from gridmr_spark.operators.parallel import run_parallel
@@ -2791,12 +2704,9 @@ def table_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     check done on O(#groups) manifest JSON; source columns stay in the
     data files, so time travel, changefeed, DV deletes, and SQL views
     all compose with the layout unchanged."""
-    import shutil
-
     from gridmr_spark.sources.table_format import ManifestTable, _norm
 
-    root = _scratch(sf_dir, "pttbl")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("pttbl")
     t = ManifestTable(root)
     orders = load_table(spark, sf_dir, "orders").select("o_orderdate", "o_totalprice")
     t.commit(

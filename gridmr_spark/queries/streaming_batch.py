@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from gridmr_spark.catalog import load_table
 from gridmr_spark.functions.localdata import local_df
 from gridmr_spark.queries import query
+from gridmr_spark.session import session_conf
+from gridmr_spark.sources import scratch_dir
 from gridmr_spark.streaming.windows import session_agg, sliding_agg, tumbling_agg
 
 _TUMBLING_ORACLE = """
@@ -252,6 +254,10 @@ def stream_tws_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return user_sessions_batch(load_table(spark, sf_dir, "events"))
 
 
+# Target distinct keys per RocksDB state store (see _run_tws_live).
+_STATE_KEYS_PER_STORE = 128
+
+
 def _run_tws_live(spark, sf_dir: str, tag: str, sentinel_row, build_stream):
     """Shared live-run harness for the transformWithStateInPandas queries:
     stage events (+ one far-future sentinel row so the final watermark
@@ -259,11 +265,7 @@ def _run_tws_live(spark, sf_dir: str, tag: str, sentinel_row, build_stream):
     availableNow through the RocksDB state store into a parquet sink,
     return the sink minus the sentinel. Returns None when no protobuf
     runtime exists anywhere (callers fall back to their batch twin)."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from gridmr_spark.compat.pbshim import ensure_protobuf
 
@@ -272,21 +274,14 @@ def _run_tws_live(spark, sf_dir: str, tag: str, sentinel_row, build_stream):
     )
     if not ensure_protobuf():
         return None
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    key = hashlib.md5(f"{sf_dir}:{tag}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"gridmr_{tag}_{key}")
-    src = os.path.join(base, "src")
-    run = os.path.join(base, f"run-{uuid.uuid4().hex[:8]}")
-    ck, sink = os.path.join(run, "ck"), os.path.join(run, "out")
+    base = scratch_dir(tag)
+    src, ck, sink = (os.path.join(base, d) for d in ("src", "ck", "out"))
     sentinel = local_df(
         spark,
         [sentinel_row],
         "event_id long, user_id long, ts timestamp, value double, event_type string",
     )
-    ev.unionByName(sentinel).write.mode("overwrite").parquet(src)
+    ev.unionByName(sentinel).write.parquet(src)
     # Size the stream's STATE partitions to state volume, not to cores
     # (guide §2/§5). Structured Streaming pins the state-store partition
     # count to spark.sql.shuffle.partitions at the FIRST start of a
@@ -295,11 +290,12 @@ def _run_tws_live(spark, sf_dir: str, tag: str, sentinel_row, build_stream):
     # state the per-store open/snapshot/commit overhead (measured ~24 s
     # summed across 32 stores per batch in the r14 phase instrumentation)
     # dwarfs the state work itself — the stream ran SLOWER at 32 cores
-    # than at 8 (PERF_r14 scaling 0.51). Checkpoints here are fresh per
-    # run (run-{uuid}), so nothing pins the count and it can derive from
-    # the state's actual driver: the number of DISTINCT KEYS (state per
-    # key is O(sessions inside one watermark delay) — bounded), at a
-    # target keys-per-store, clamped to [1, session shuffle partitions].
+    # than at 8 (PERF_r14 scaling 0.51). The checkpoint here is fresh per
+    # call (a new scratch path), so nothing pins the count and it can
+    # derive from the state's actual driver: the number of DISTINCT KEYS
+    # (state per key is O(sessions inside one watermark delay) — bounded),
+    # at _STATE_KEYS_PER_STORE keys per store, clamped to [1, session
+    # shuffle partitions].
     # Too few partitions serializes the per-key Python processor work
     # (measured 30.6 s at ONE partition — the pandas-per-key cost needs
     # parallelism); too many pays per-store commit overhead for
@@ -313,11 +309,13 @@ def _run_tws_live(spark, sf_dir: str, tag: str, sentinel_row, build_stream):
         .agg(F.approx_count_distinct("user_id").alias("k"))
         .first()["k"]
     )
-    keys_per_store = int(os.environ.get("SPARK_GRAFT_STATE_KEYS_PER_STORE", "128"))
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_state = max(1, min(sess_parts, -(-n_keys // keys_per_store)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-    try:
+    n_state = max(1, min(sess_parts, -(-n_keys // _STATE_KEYS_PER_STORE)))
+    with session_conf(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.shuffle.partitions": str(n_state),
+    }):
         q = (
             build_stream(spark.readStream.schema(ev.schema).parquet(src))
             .writeStream.outputMode("append")
@@ -327,11 +325,7 @@ def _run_tws_live(spark, sf_dir: str, tag: str, sentinel_row, build_stream):
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-    out = spark.read.parquet(sink).where(F.col("user_id") >= 0).localCheckpoint(eager=True)
-    shutil.rmtree(run, ignore_errors=True)  # sink is materialized above
-    return out
+    return spark.read.parquet(sink).where(F.col("user_id") >= 0)
 
 
 import datetime as _dt

@@ -1744,15 +1744,11 @@ def pipeline_incremental_dedup_table(spark: SparkSession, sf_dir: str) -> DataFr
     audit trail a data-governance review wants). At 100 TB: the pair
     search is banded, the recluster is day-sized, the table rewrite is
     copy-on-write bounded by partitioning — no stage rescans history."""
-    import shutil as _sh
-
     from gridmr_spark.operators.graph import incremental_components
-    from gridmr_spark.queries.sources_io import _scratch
+    from gridmr_spark.sources import scratch_dir
     from gridmr_spark.sources.table_format import ManifestTable
 
-    root = _scratch(sf_dir, "dedup_state")
-    _sh.rmtree(root, ignore_errors=True)
-    t = ManifestTable(root)
+    t = ManifestTable(scratch_dir("dedup_state"))
     # v1, the day-0 state, commits in the prior build's thread, so it
     # overlaps the day's pair searches.
     new, _prior, day_pairs = _incremental_day(spark, sf_dir, on_prior=t.commit)
@@ -2798,9 +2794,7 @@ def pipeline_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once. Re-running reproduces byte-identical shard membership —
     the property that keeps downstream tokenizer caches and resume-from-
     shard training valid."""
-    import shutil
-
-    from gridmr_spark.queries.sources_io import _scratch
+    from gridmr_spark.sources import scratch_dir
 
     docs = load_table(spark, sf_dir, "documents")
     h = F.conv(
@@ -2814,8 +2808,7 @@ def pipeline_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         (h % 1000000007).alias("h_mod"),
         n_tok.alias("n_tok"),
     )
-    out = _scratch(sf_dir, "shards")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir("shards")
     sharded.write.partitionBy("shard_id").mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy(F.col("shard_id").cast("long").alias("shard_id")).agg(
@@ -2901,17 +2894,13 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the production shape for corpus statistics at 100 TB: the
     state is width*depth counters regardless of stream volume, each batch
     costs O(batch), and every refresh is a time-travelable snapshot."""
-    import shutil
-    import uuid as _uuid
-
     from gridmr_spark.operators.bloom import countmin_build, countmin_estimate
-    from gridmr_spark.queries.sources_io import _scratch
+    from gridmr_spark.sources import scratch_dir
     from gridmr_spark.sources.table_format import ManifestTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = _scratch(sf_dir, "cmstream")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ck, tbl = f"{base}/src", f"{base}/ck-{_uuid.uuid4().hex[:8]}", f"{base}/tbl"
+    base = scratch_dir("cmstream")
+    src, ck, tbl = f"{base}/src", f"{base}/ck", f"{base}/tbl"
     docs.repartition(4).write.mode("overwrite").parquet(src)
     t = ManifestTable(tbl)
 

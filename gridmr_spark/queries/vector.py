@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from gridmr_spark.catalog import load_table
 from gridmr_spark.operators.similarity import RandomHyperplaneLSH, cosine_topk
 from gridmr_spark.queries import query
+from gridmr_spark.sources import scratch_dir
 
 # Sequential double fold for the DuckDB side (bit-identical to F.aggregate).
 _DOT = "list_reduce(list_transform(list_zip({a}, {b}), t -> t[1]*t[2]), (x,y) -> x+y)"
@@ -671,10 +672,12 @@ def similarity_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ search from PERSISTED index artifacts (operators/ann_index.py):
     fit/search separation. Production builds the index nightly (codebook
     fit + full-table encode, the expensive parts) and searches it many
-    times; here the first call per sf materializes <scratch>/codebooks.parquet
-    + codes.parquet and every search reads ONLY those artifacts plus the
-    re-rank survivors' raw vectors. The codes artifact is ~m bytes/vector —
-    the 100 TB-corpus index that fits in cluster RAM.
+    times; here every call builds <scratch>/codebooks.parquet + codes.parquet
+    under a fresh scratch path (no index carries over between calls or
+    runs, so the timed call pays the build), and the search reads ONLY
+    those artifacts plus the re-rank survivors' raw vectors. The codes
+    artifact is ~m bytes/vector — the 100 TB-corpus index that fits in
+    cluster RAM.
 
     EXACT-REGIME parameter point (hash-checked): shortlist = n, so stage 2
     re-ranks every candidate exactly and the ADC stage only orders the
@@ -685,20 +688,14 @@ def similarity_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime (shortlist=96) is similarity_pq_topk's job; fidelity of
     persisted-vs-in-memory at that regime stays proven in
     tests/test_ann_index.py, which also proves zero-fit search (spy)."""
-    import hashlib as _h
-    import os as _os
-    import tempfile as _t
-
     from gridmr_spark.catalog import table_rows
     from gridmr_spark.operators.ann_index import PersistedPQ
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = _h.md5(f"{sf_dir}:pqidx".encode()).hexdigest()[:12]
-    path = _os.path.join(_t.gettempdir(), f"gridmr_pqidx_{key}")
+    path = scratch_dir("pqidx")
     # shortlist is a SEARCH-time knob (build artifacts are regime-free)
     idx = PersistedPQ(shortlist=max(96, table_rows(sf_dir, "embeddings")))
-    if not _os.path.isdir(_os.path.join(path, "codes.parquet")):
-        idx.build(emb, "vec_id", "embedding", path)
+    idx.build(emb, "vec_id", "embedding", path)
     # k+3 slack: boundary ties resolved by fold scores (see _fold_rerank)
     sel = idx.search(emb, "vec_id", "embedding", path, k=8, query_bound=1000)
     return _fold_rerank(sel, emb, k=5, q_col="qid", c_col="cid")
@@ -710,10 +707,11 @@ _IVF_PERSISTED_ORACLE = _PERSISTED_ORACLE.replace("  WHERE q.vec_id < 1000\n", "
 @query("similarity_ivf_persisted", oracle=_IVF_PERSISTED_ORACLE)
 def similarity_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search from PERSISTED artifacts: centroids + cell-partitioned
-    postings written once (repartitioned by cell, so each cell's rows are
-    contiguous on disk — at scale a probed search reads nprobe file ranges
-    instead of re-assigning and re-shuffling the base table), searched
-    with zero fit work.
+    postings (repartitioned by cell, so each cell's rows are contiguous on
+    disk — at scale a probed search reads nprobe file ranges instead of
+    re-assigning and re-shuffling the base table), searched with zero fit
+    work. Every call builds the index under a fresh scratch path, so no
+    index carries over between calls or runs.
 
     EXACT-REGIME parameter point (hash-checked): nprobe = k — every query
     probes every cell, so coverage is total and the top-5 is exact; with
@@ -723,10 +721,7 @@ def similarity_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity_ivf_topk's job (same sqrt(n) cell sizing, measured recall
     ~0.94, floor 0.8); tests/test_ann_index.py keeps proving probed-regime
     fidelity of persisted-vs-in-memory row-for-row."""
-    import hashlib as _h
     import math as _m
-    import os as _os
-    import tempfile as _t
 
     from gridmr_spark.catalog import table_rows
     from gridmr_spark.operators.ann_index import PersistedIVF
@@ -738,10 +733,8 @@ def similarity_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=k_cells, nprobe=k_cells, iters=4,  # nprobe=k: probe every cell
         seed=42, assign_n=2,
     )
-    key = _h.md5(f"{sf_dir}:ivfidx".encode()).hexdigest()[:12]
-    path = _os.path.join(_t.gettempdir(), f"gridmr_ivfidx_{key}")
-    if not _os.path.isdir(_os.path.join(path, "postings.parquet")):
-        idx.build(emb, "vec_id", "embedding", path)
+    path = scratch_dir("ivfidx")
+    idx.build(emb, "vec_id", "embedding", path)
     sel = idx.search(
         # k+3 slack: boundary ties resolved by fold scores (see _fold_rerank)
         spark, emb.select("vec_id", "embedding"), "vec_id", "embedding", path, k=8
@@ -764,11 +757,7 @@ def similarity_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     §D carries recall telemetry at the appended state. At 100 TB this is
     the nightly-ingest shape: O(|new| * k) assignment + one append write,
     never a corpus re-encode."""
-    import hashlib as _h
     import math as _m
-    import os as _os
-    import shutil as _sh
-    import tempfile as _t
 
     from gridmr_spark.catalog import table_rows
     from gridmr_spark.operators.ann_index import PersistedIVF
@@ -777,11 +766,7 @@ def similarity_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_rows(sf_dir, "embeddings")
     k_cells = max(4, _m.ceil(_m.sqrt(max(n, 1))))
     idx = PersistedIVF(k=k_cells, nprobe=k_cells, iters=4, seed=42, assign_n=2)
-    key = _h.md5(f"{sf_dir}:ivfappend".encode()).hexdigest()[:12]
-    path = _os.path.join(_t.gettempdir(), f"gridmr_ivf_append_{key}")
-    # build+append must happen EXACTLY once per run: a stale appended
-    # index would double the odd half on re-append, so rebuild fresh
-    _sh.rmtree(path, ignore_errors=True)
+    path = scratch_dir("ivf_append")
     idx.build(emb.where(F.col("vec_id") % 2 == 0), "vec_id", "embedding", path)
     idx.append(emb.where(F.col("vec_id") % 2 == 1), "vec_id", "embedding", path)
     sel = idx.search(

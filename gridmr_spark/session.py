@@ -9,6 +9,8 @@ coalescing, skew-join splitting, and join-strategy demotion.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -39,6 +41,26 @@ def export_worker_path(path: str) -> None:
         sc_parts = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
         if path not in sc_parts:
             sc.environment["PYTHONPATH"] = os.pathsep.join(sc_parts + [path])
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the length of a ``with`` block, then
+    put back each key's prior value, unsetting a key that was unset before.
+    Spark conf is session state, so a per-job setting made any other way
+    outlives the job."""
+    was_set = spark.conf.getAll
+    prior = {k: was_set.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "gridmr_spark", cpus: int | None = None) -> SparkSession:

@@ -75,18 +75,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file stream source requires a *directory*; the testdata table is a
     single file, so stage a symlink directory (no data copy).
     """
-    import hashlib
     import os
-    import tempfile
+
+    from gridmr_spark.sources import scratch_dir
 
     src = os.path.abspath(table_path(sf_dir, "events"))
-    stage = os.path.join(
-        tempfile.gettempdir(), f"gridmr_stream_{hashlib.md5(src.encode()).hexdigest()[:12]}"
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
+    stage = scratch_dir("stream")
+    os.makedirs(stage)
+    os.symlink(src, os.path.join(stage, "events.parquet"))
     if _events_ts_is_legacy_nanos(src):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.readStream.schema(_RAW_SCHEMA_NANOS).format("parquet").load(stage)

@@ -289,8 +289,9 @@ def test_pipe_job_failing_mapper_fails_the_action(spark, map_cmd, code):
 def test_submit_cli_in_process(spark, tmp_path):
     """The gridmr-submit CLI end to end on the test session: split, pipe
     through a shell mapper and a python reducer, one final.txt-style part.
-    The CLI's get_spark finds the running session and leaves its conf
-    (partitions, parallelism, app name) as it found it."""
+    The CLI's get_spark finds the running session, and the CLI leaves its
+    conf (partitions, parallelism, app name, the --chunk-mb split size)
+    as it found it."""
     from gridmr_spark.compat import cli
 
     mapper, reducer = _wordcount_executables(tmp_path)
@@ -298,13 +299,30 @@ def test_submit_cli_in_process(spark, tmp_path):
     inp.write_text("Hello world hello\n\nWORLD of spark\nto be or not to be\n")
     out = tmp_path / "out"
     conf_before = dict(spark.conf.getAll)
-    argv = [mapper, reducer, str(inp), str(out), "--reducers", "3", "--single-file"]
+    argv = [mapper, reducer, str(inp), str(out), "--reducers", "3", "--single-file",
+            "--chunk-mb", "1"]
     assert cli.main(argv) == 0
     parts = [p for p in out.iterdir() if p.name.startswith("part-")]
     assert len(parts) == 1
     counts = {k: int(v) for k, v in parse_tab_kv(parts[0].read_text().splitlines())}
     assert counts == Counter(re.findall(r"[a-z0-9]+", inp.read_text().lower()))
     assert dict(spark.conf.getAll) == conf_before
+
+
+def test_session_conf_restores_prior_values(spark):
+    """session_conf puts back a key that was set and unsets one that was
+    not, also when the block raises."""
+    from gridmr_spark.session import session_conf
+
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.sql.files.maxRecordsPerFile"
+    before = dict(spark.conf.getAll)
+    assert set_key in before and unset_key not in before
+    with pytest.raises(RuntimeError):
+        with session_conf(spark, {set_key: "3", unset_key: "7"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "7"
+            raise RuntimeError("job failed")
+    assert dict(spark.conf.getAll) == before
 
 
 def test_sources_roundtrip(spark, tmp_path):
@@ -422,18 +440,25 @@ def test_hll_mergeable_sketch_error_bound(spark, sf_oracle):
                     .select("o_custkey").distinct().count())
     assert abs(out["1-URGENT"] - exact_urgent) / exact_urgent < 0.05
 
-def test_compaction_collapses_file_count(spark, sf_oracle):
+def test_compaction_collapses_file_count(spark, sf_oracle, monkeypatch):
     """layout_compact_files must actually shrink the part-file count: the
     manufactured small-file layout has many files, the compacted rewrite
     at most 2 — same rows either way (value parity is the gate's job)."""
     import os
 
-    from gridmr_spark.queries import load_all
-    from gridmr_spark.queries.sources_io import _scratch
+    from gridmr_spark.queries import load_all, sources_io
 
+    made = {}
+
+    def recording_scratch_dir(tag):
+        made[tag] = path = scratch_dir(tag)
+        return path
+
+    scratch_dir = sources_io.scratch_dir
+    monkeypatch.setattr(sources_io, "scratch_dir", recording_scratch_dir)
     load_all()["layout_compact_files"].fn(spark, sf_oracle)
-    small = [f for f in os.listdir(_scratch(sf_oracle, "smallfiles")) if f.startswith("part-")]
-    compact = [f for f in os.listdir(_scratch(sf_oracle, "compacted")) if f.startswith("part-")]
+    small = [f for f in os.listdir(made["smallfiles"]) if f.startswith("part-")]
+    compact = [f for f in os.listdir(made["compacted"]) if f.startswith("part-")]
     assert len(small) >= 8, small
     assert len(compact) <= 2, compact
 

@@ -30,17 +30,16 @@ def test_bm25_ranks_are_contiguous_and_ordered(spark, sf_smoke):
         assert all(r["n_terms"] >= 1 for r in rows)
 
 
-def test_bm25_more_matched_terms_beats_fewer_at_same_tf(spark):
+def test_bm25_more_matched_terms_beats_fewer_at_same_tf(spark, tmp_path):
     """A doc matching both probe terms must outscore a doc of the SAME
     length matching one (idf terms are positive in this corpus)."""
+    import os
+
     import pandas as pd
 
     # tiny corpus through the same scoring shape: reuse the query fn by
     # staging a one-table sf_dir
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="bm25_mini_")
+    d = str(tmp_path)
     pd.DataFrame(
         {
             "doc_id": [1, 2, 3, 4],
@@ -124,6 +123,31 @@ def test_skyline_matches_bruteforce_random(spark):
     assert got == want
 
 
+def test_skyline_skips_nulls(spark):
+    """Nulls in either column: a null ``maximize`` key and a group whose
+    ``minimize`` values are all null must not break the driver-side
+    threshold scan, and the frontier equals the skyline of the rows that
+    have no nulls (a row with a null in either column is never kept)."""
+    from gridmr_spark.queries.retrieval import pareto_front
+
+    rng = random.Random(29)
+    rows = [(i, rng.randint(0, 12), float(rng.randint(0, 40))) for i in range(200)]
+    rows += [(200 + i, None, float(i)) for i in range(5)]   # null maximize
+    rows += [(300 + i, 99, None) for i in range(3)]         # all-null group
+    rows += [(400 + i, rng.randint(0, 12), None) for i in range(5)]
+    df = spark.createDataFrame(rows, "id long, big long, small double")
+    got = {r["id"] for r in pareto_front(df, maximize="big", minimize="small").collect()}
+    full = [(i, b, s) for (i, b, s) in rows if b is not None and s is not None]
+    want = {
+        i
+        for (i, b, s) in full
+        if not any(
+            qb >= b and qs <= s and (qb > b or qs < s) for (_, qb, qs) in full
+        )
+    }
+    assert got == want
+
+
 def test_jl_projection_preserves_norms(spark, sf_smoke):
     """Rademacher-sign JL property: E[||Pv||^2] = d_out * ||v||^2, so the
     per-vector ratio ||Pv||^2 / (8 * ||v||^2) concentrates around 1. (A
@@ -159,18 +183,14 @@ def test_jl_projection_preserves_norms(spark, sf_smoke):
     assert float((ratios > 0.05).mean()) > 0.95  # no systematic collapse
 
 
-def test_zonemap_prunes_files(spark, sf_smoke):
-    import hashlib
-    import os
-    import tempfile
-
+def test_zonemap_prunes_files(spark, sf_smoke, tmp_path):
     from gridmr_spark.catalog import load_table
     from gridmr_spark.operators.layout import zonemap_pruned_read, zonemap_write
 
     orders = load_table(spark, sf_smoke, "orders").select(
         "o_orderkey", "o_custkey", F.col("o_totalprice").cast("double").alias("o_totalprice")
     )
-    path = os.path.join(tempfile.gettempdir(), "gridmr_test_zonemap")
+    path = str(tmp_path / "zonemap")
     zonemap_write(orders, path, "o_totalprice", n_files=16)
     df, n_hit, n_total = zonemap_pruned_read(
         spark, path, "o_totalprice", 400000.0, 450000.0

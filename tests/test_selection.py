@@ -122,11 +122,13 @@ def test_shard_export_layout_and_reproducibility(spark, sf_smoke):
     in exactly one shard, and a re-run reproduces identical membership."""
     import glob as g
 
-    from gridmr_spark.queries.sources_io import _scratch
     from gridmr_spark.queries.textops import pipeline_shard_export
 
-    m1 = {tuple(r) for r in pipeline_shard_export(spark, sf_smoke).collect()}
-    out = _scratch(sf_smoke, "shards")
+    df1 = pipeline_shard_export(spark, sf_smoke)
+    m1 = {tuple(r) for r in df1.collect()}
+    roots = {f.split("/shard_id=")[0] for f in df1.inputFiles()}
+    assert len(roots) == 1, roots
+    out = roots.pop().removeprefix("file://")
     dirs = sorted(g.glob(out + "/shard_id=*"))
     assert 1 <= len(dirs) <= 16
     back = spark.read.parquet(out)

@@ -254,13 +254,11 @@ def test_sync_rejects_decoy_and_mid_record_start(tmp_path):
         assert W._sync_to_record(fh, offsets[-1] + 1, fsize) is None
 
 
-def test_documents_pipeline_feed(spark, sf_smoke):
+def test_documents_pipeline_feed(spark, sf_smoke, tmp_path):
     """WARC -> documents-shaped frame: the ingest output joins the existing
     text operators without adaptation."""
     docs = spark.read.parquet(f"{sf_smoke}/documents.parquet").limit(50)
-    out_dir = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), "gridmr_warc_feed_test"
-    )
+    out_dir = str(tmp_path / "warc_feed")
     W.register(spark)
     docs.select(
         F.concat(F.lit("http://synth.example/doc/"), F.col("doc_id")).alias(
