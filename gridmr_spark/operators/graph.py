@@ -8,23 +8,70 @@ That is connected components, the one operator family in this engine that
 is inherently iterative (SQL needs recursion for it; the DuckDB oracle uses
 WITH RECURSIVE, Spark iterates a DataFrame fixpoint).
 
-Algorithm: min-label propagation. Every vertex starts labeled with its own
-id; each round every vertex takes the min of its label and its neighbors'
-labels; converged when no label changes. Rounds needed = component
-diameter — small for near-dup clusters (pairs are dense within a group).
-Each round is one shuffle join + one shuffle agg on the edge partitioning.
+Algorithm: min-label propagation with pointer jumping. Every vertex starts
+labeled with its own id; each round every vertex takes the min of its label
+and its neighbors' labels, then the label of its label; converged when no
+label changes.
 
-Scale notes (100 TB posture):
-- ``localCheckpoint`` after every round truncates the lineage — without it
-  the plan doubles per iteration and the driver OOMs planning round ~15.
-- The convergence probe is a ``limit(1).count()`` on the changed-labels
-  frame — one cheap action per round, no data to the driver.
+Two regimes, chosen by edge count the way ``autoBroadcastJoinThreshold``
+chooses a join strategy. The edges are projected and materialized once
+(``localCheckpoint``), and an ``Observation`` on that checkpoint counts
+them, so the size is known without an extra job.
+- Small (at most ``SMALL_GRAPH_EDGES``): the whole edge list goes to ONE
+  task (``groupBy(lit(0)).applyInPandas``), which runs the same propagation
+  vectorized in NumPy. Dedup graphs have a few hundred edges; for them the
+  distributed loop is all scheduling overhead (a dozen tiny jobs).
+- Large: each round is one shuffle join + one shuffle agg on the edge
+  partitioning, materialized by ``localCheckpoint`` — without it the plan
+  doubles per iteration and the driver OOMs planning round ~15. The round's
+  changed-label count rides that checkpoint as an ``Observation``, so a
+  round is one job, with no separate convergence probe.
+
+Edges with a null endpoint connect nothing and are dropped.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Largest edge count solved in one task. A million id pairs is tens of MB of
+# Arrow in one Python worker, and at that size the single task still beats
+# the per-round job overhead of the distributed loop.
+SMALL_GRAPH_EDGES = 1 << 20
+
+
+def _component_solver():
+    """The one-task solver: pandas (_s, _d) edges -> (id, component).
+
+    Built here as a closure, with its imports inside, so cloudpickle ships it
+    by value: workers run it without importing this package."""
+
+    def solve(pdf):
+        import numpy as np
+        import pandas as pd
+
+        n = len(pdf)
+        ids, idx = np.unique(
+            np.concatenate([pdf["_s"].to_numpy(), pdf["_d"].to_numpy()]),
+            return_inverse=True,
+        )
+        a, b = idx[:n], idx[n:]
+        # Labels are positions in the sorted ids, so the min position is the
+        # min id. Each round: min over self and both edge directions, then a
+        # pointer jump (label <- label of label).
+        lab = np.arange(len(ids))
+        while True:
+            new = lab.copy()
+            np.minimum.at(new, a, lab[b])
+            np.minimum.at(new, b, lab[a])
+            new = new[new]
+            if np.array_equal(new, lab):
+                return pd.DataFrame({"id": ids, "component": ids[lab]})
+            lab = new
+
+    return solve
 
 
 def connected_components(
@@ -39,52 +86,63 @@ def connected_components(
 
     vertices: DataFrame with ``id_col`` (one row per vertex; isolated
     vertices allowed). edges: DataFrame with ``src_col``/``dst_col``
-    (undirected; direction and duplicates don't matter). Returns
-    DataFrame[id, component].
+    (undirected; direction and duplicates don't matter; endpoints absent
+    from ``vertices`` are vertices too). Returns DataFrame[id, component].
+    ``max_iter`` bounds the rounds of the distributed (large) regime.
     """
-    # Symmetrize once and MATERIALIZE (localCheckpoint): the edge frame is
-    # re-read every round, and without this the whole upstream edge
-    # computation (for dedup graphs, a quadratic cosine join) re-executes
-    # per iteration — the loop cost must be rounds x |E|, not
-    # rounds x cost(edge derivation).
-    fwd = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-    rev = edges.select(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d"))
-    e = fwd.union(rev).distinct().localCheckpoint()
+    e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+    # Both endpoints in one id type: the solver's schema and the union of the
+    # two edge directions need it.
+    id_type = e.select("_s").union(e.select("_d")).schema[0].dataType
+    # Materialized ONCE: the upstream edge derivation (for dedup graphs, the
+    # whole pair search) must not re-run per round or per consumer.
+    size = Observation()
+    e = (
+        e.select(F.col("_s").cast(id_type), F.col("_d").cast(id_type))
+        .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if size.get["n"] <= SMALL_GRAPH_EDGES:
+        schema = StructType(
+            [StructField("id", id_type), StructField("component", id_type)]
+        )
+        labels = (
+            e.groupBy(F.lit(0).alias("_g")).applyInPandas(_component_solver(), schema)
+        ).localCheckpoint()
+    else:
+        labels = _propagate(e, max_iter)
+    # ISOLATED vertices (no incident edge) keep their own id; for dedup
+    # graphs they are most of the corpus, so they never enter the solve.
+    isolated = vertices.select(F.col(id_col).alias("id")).join(
+        labels, "id", "left_anti"
+    )
+    return labels.unionByName(isolated.select("id", F.col("id").alias("component")))
 
-    # ISOLATED vertices (no incident edge) can never receive a message and
-    # never change label, yet the old loop shuffled, aggregated and
-    # checkpointed them every round. For dedup graphs they are the vast
-    # majority (most documents are not near-duplicates), so the iteration
-    # runs over EDGE-ENDPOINT vertices only and singletons rejoin at the
-    # end with component = id — identical output (a singleton's label is
-    # its own id by definition of min-label propagation), but every round's
-    # join/agg/checkpoint is sized by the dup graph, not the corpus.
-    # Endpoints absent from `vertices` still enter through the message
-    # aggregate exactly as before (they are never seeded with a self label).
-    # ONE materialization serves both slices: the active/isolated split is
-    # a single left join tagged into the seed checkpoint, so neither the
-    # loop seed nor the final singleton union re-derives the vertex frame.
-    v = vertices.select(F.col(id_col).alias("id"))
-    ep = e.select(F.col("_s").alias("id")).distinct()  # symmetrized: every endpoint
-    tagged = v.join(
-        ep.select("id", F.lit(True).alias("_act")), "id", "left"
-    ).localCheckpoint()
-    labels = tagged.where("_act").select("id", F.col("id").alias("component"))
-    isolated = tagged.where(F.col("_act").isNull()).select(
-        "id", F.col("id").alias("component")
+
+def _propagate(e: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed regime: min-label propagation over the checkpointed
+    ``(_s, _d)`` edges, one job per round. Returns DataFrame[id, component]
+    over every endpoint."""
+    sym = (
+        e.union(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
+        .distinct()
+        .localCheckpoint()
+    )
+    labels = (
+        sym.select(F.col("_s").alias("id")).distinct()  # symmetrized: every endpoint
+        .select("id", F.col("id").alias("component"))
+        .localCheckpoint()
     )
 
     def _round(lbl: DataFrame) -> DataFrame:
         # Neighbor messages: each edge forwards the src's current label to dst.
-        # Self rows are tagged so the round's aggregate can carry the OLD
-        # label through for free: min(component) is the propagated label,
-        # min(component) over self rows is the previous one — the change
-        # flag then rides the checkpointed frame and the convergence probe
-        # becomes a filter+limit over already-materialized blocks instead
-        # of a second shuffle join per round (guide §2.4: the old probe was
-        # an Exchange+join whose only output was one boolean).
+        # Self rows are tagged so the round's aggregate carries the OLD label
+        # through for free: min(component) is the propagated label, min over
+        # self rows the previous one, and the change flag rides the
+        # checkpointed frame.
         msgs = (
-            e.join(lbl, e["_s"] == lbl["id"])
+            sym.join(lbl, sym["_s"] == lbl["id"])
             .select(F.col("_d").alias("id"), "component", F.lit(False).alias("_self"))
         )
         prop = (
@@ -108,25 +166,25 @@ def connected_components(
             "id",
             F.col("_jump").alias("component"),
             # Labels are monotonically nonincreasing, so < is change.
-            # An id absent from the prior labels (edge endpoint outside
-            # the vertex set) has NULL _old: the flag is NULL, counted
-            # as unchanged — identical to the old inner-join probe,
-            # which dropped such rows.
             (F.col("_jump") < F.col("_old")).alias("_chg"),
         )
 
-    # One materialization + probe per round. NOT fused two-rounds-per-
-    # checkpoint like pagerank: a CC round references its input twice
-    # (self rows + messages), so fusing would re-compute the unmaterialized
-    # prior round unless exchange reuse happens to fire — measured ~neutral
-    # locally and a 2x-per-round-work risk at scale.
+    # One materialization per round. NOT fused two-rounds-per-checkpoint
+    # like pagerank: a CC round references its input twice (self rows +
+    # messages), so fusing would re-compute the unmaterialized prior round
+    # unless exchange reuse happens to fire — measured ~neutral locally and
+    # a 2x-per-round-work risk at scale.
     for _ in range(max_iter):
-        new_labels = _round(labels).localCheckpoint()  # cut lineage per round
-        changed = new_labels.where("_chg").limit(1).count()
-        labels = new_labels.select("id", "component")
-        if changed == 0:
+        changed = Observation()
+        labels = (
+            _round(labels)
+            .observe(changed, F.sum(F.col("_chg").cast("int")).alias("n"))
+            .localCheckpoint()  # cut lineage per round
+            .select("id", "component")
+        )
+        if not changed.get["n"]:  # NULL over zero rows: nothing changed
             break
-    return labels.select("id", "component").unionByName(isolated)
+    return labels
 
 
 def incremental_components(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from gridmr_spark.catalog import load_table
 from gridmr_spark.queries import query
+from gridmr_spark.session import session_conf
 
 # ---------------------------------------------------------------------------
 # String functions over part names
@@ -558,31 +559,31 @@ def sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     right tool when refresh logic is genuinely sequential (backfills,
     convergence loops); for a plain partition the single-pass GROUP BY
     remains 12x cheaper."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_s")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE m INT DEFAULT 1;
-          DECLARE total DECIMAL(18,2) DEFAULT 0.00;
-          DECLARE n BIGINT DEFAULT 0;
-          DECLARE dt DECIMAL(18,2) DEFAULT 0.00;
-          DECLARE dn BIGINT DEFAULT 0;
-          WHILE m <= 12 DO
-            -- tuple SET: both accumulators from ONE month-pruned scan
-            SET (dt, dn) = (
-              SELECT COALESCE(SUM(CAST(l_extendedprice AS DECIMAL(18,2))), 0.00),
-                     COUNT(*)
-              FROM lineitem_s
-              WHERE year(l_shipdate) = 1995 AND month(l_shipdate) = m);
-            SET total = total + dt;
-            SET n = n + dn;
-            SET m = m + 1;
-          END WHILE;
-          SELECT CAST(total AS DOUBLE) AS revenue_1995, n AS n_items;
-        END
-        """
-    )
+    with session_conf(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE m INT DEFAULT 1;
+              DECLARE total DECIMAL(18,2) DEFAULT 0.00;
+              DECLARE n BIGINT DEFAULT 0;
+              DECLARE dt DECIMAL(18,2) DEFAULT 0.00;
+              DECLARE dn BIGINT DEFAULT 0;
+              WHILE m <= 12 DO
+                -- tuple SET: both accumulators from ONE month-pruned scan
+                SET (dt, dn) = (
+                  SELECT COALESCE(SUM(CAST(l_extendedprice AS DECIMAL(18,2))), 0.00),
+                         COUNT(*)
+                  FROM lineitem_s
+                  WHERE year(l_shipdate) = 1995 AND month(l_shipdate) = m);
+                SET total = total + dt;
+                SET n = n + dn;
+                SET m = m + 1;
+              END WHILE;
+              SELECT CAST(total AS DOUBLE) AS revenue_1995, n AS n_items;
+            END
+            """
+        )
 
 
 _PARAM_ORACLE = """

@@ -147,9 +147,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_setsim.py pins the equivalence; SCALING.md records the
     measured alpha drop). Scale: the collapse is one narrow
     groupBy(digest); pair search moves prefix postings of UNIQUE texts
-    only; CC is O(log n) pointer-jumping rounds over the sparse dup
-    graph; survivorship is one window over clusters — every stage keyed,
-    nothing quadratic, nothing driver-side."""
+    only; CC solves the sparse dup graph in one task while its edge count
+    is at most ``graph.SMALL_GRAPH_EDGES`` (pointer-jumping rounds, one
+    job each, above it); survivorship is one aggregate over clusters —
+    every stage keyed, nothing quadratic, nothing driver-side."""
     docs = load_table(spark, sf_dir, "documents")
     return keep_best_survivorship(docs)
 
@@ -166,7 +167,9 @@ def keep_best_survivorship(
     search). ``tau_num/tau_den`` is the Jaccard threshold dial SCALING.md
     names as the lever on dup-dense corpora: a higher tau shrinks both
     the prefix postings AND the surviving cliques (measured there at
-    tau = 4/5 on the tiled sf1 corpus)."""
+    tau = 4/5 on the tiled sf1 corpus). The pair graph's components come
+    from ``connected_components``: one task while the graph is small,
+    distributed pointer-jumping rounds above ``SMALL_GRAPH_EDGES``."""
     from pyspark.sql import functions as F
 
     from gridmr_spark.operators.graph import connected_components
@@ -266,8 +269,9 @@ def pipeline_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-portable, so the oracle replays pairs + closure + rule and the
     hash row proves the guarantee end to end. Scale: the pair graph and
     CC are the proven dedup_keep_best machinery (digest pre-collapse,
-    O(log n) pointer-jumping); the split itself is one hash map — no new
-    shuffle beyond the clustering the pipeline already runs."""
+    connected components in one task for a small dup graph); the split
+    itself is one hash map — no new shuffle beyond the clustering the
+    pipeline already runs."""
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")

@@ -3,16 +3,24 @@
 from __future__ import annotations
 
 import random
+import subprocess
+import sys
 
 import pytest
 
+from gridmr_spark.operators import graph
 from gridmr_spark.operators.graph import connected_components
 
 
-def _union_find_components(n: int, edges: list[tuple[int, int]]) -> dict[int, int]:
-    parent = list(range(n))
+def _union_find_components(vertices, edges) -> dict:
+    """Reference: min id per component over ``vertices`` and every edge
+    endpoint, by pure-Python union-find."""
+    parent = {v: v for v in vertices}
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
 
-    def find(x: int) -> int:
+    def find(x):
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
@@ -23,25 +31,32 @@ def _union_find_components(n: int, edges: list[tuple[int, int]]) -> dict[int, in
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     # min id per component
-    roots: dict[int, int] = {}
-    for v in range(n):
+    roots: dict = {}
+    for v in parent:
         r = find(v)
         roots[r] = min(roots.get(r, v), v)
-    return {v: roots[find(v)] for v in range(n)}
+    return {v: roots[find(v)] for v in parent}
+
+
+def _cc(spark, vertices, edges, id_type="long") -> dict:
+    v = spark.createDataFrame([(i,) for i in vertices], f"id {id_type}")
+    e = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+    rows = connected_components(v, e).collect()
+    got = {r["id"]: r["component"] for r in rows}
+    assert len(got) == len(rows)  # one row per vertex
+    return got
 
 
 def _run(spark, n: int, edges: list[tuple[int, int]]):
-    vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    e = (
-        spark.createDataFrame(edges, "src long, dst long")
-        if edges
-        else spark.createDataFrame([], "src long, dst long")
-    )
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(vertices, e).collect()
-    }
-    assert got == _union_find_components(n, edges)
+    assert _cc(spark, range(n), edges) == _union_find_components(range(n), edges)
+
+
+@pytest.fixture(params=["one_task", "distributed"])
+def regime(request, monkeypatch):
+    """Run the test in each regime; "distributed" forces the round loop by
+    making no graph small enough for one task."""
+    if request.param == "distributed":
+        monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
 
 
 def test_cc_random_graph(spark):
@@ -57,12 +72,73 @@ def test_cc_path_graph_high_diameter(spark):
     _run(spark, 30, [(i, i + 1) for i in range(29)])
 
 
+def test_cc_path_and_random_graph_distributed(spark, monkeypatch):
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+    test_cc_path_graph_high_diameter(spark)
+    test_cc_random_graph(spark)
+
+
 def test_cc_isolated_and_self_loops(spark):
     _run(spark, 10, [(0, 0), (3, 4), (4, 3)])
 
 
 def test_cc_no_edges(spark):
     _run(spark, 5, [])
+
+
+def _random_graph(seed: int, to_id):
+    """Vertices 0..59 minus a few; edges over 0..69, so some endpoints are
+    not vertices; plus self-loops and duplicated and reversed edges."""
+    rng = random.Random(seed)
+    vertices = [to_id(i) for i in range(60) if rng.random() > 0.1]
+    edges = [(rng.randrange(70), rng.randrange(70)) for _ in range(40)]
+    edges += [(i, i) for i in rng.sample(range(70), 3)]
+    edges += rng.sample(edges, 5) + [(b, a) for a, b in rng.sample(edges, 5)]
+    return vertices, [(to_id(a), to_id(b)) for a, b in edges]
+
+
+@pytest.mark.parametrize(
+    "id_type, to_id", [("long", int), ("int", int), ("string", str)]
+)
+def test_cc_regimes_match_union_find(spark, regime, id_type, to_id):
+    # string ids compare as strings ("10" < "9"), in Spark and the reference
+    for seed in (1, 2):
+        vertices, edges = _random_graph(seed, to_id)
+        want = _union_find_components(vertices, edges)
+        assert _cc(spark, vertices, edges, id_type) == want
+    ids = [to_id(i) for i in range(4)]
+    assert _cc(spark, ids, [], id_type) == {i: i for i in ids}
+
+
+def test_cc_null_endpoint_drops_the_edge(spark, regime):
+    """An edge with a null endpoint connects nothing: 1 stays isolated and 4,
+    seen only on such an edge, is not a vertex."""
+    edges = [(1, None), (None, 2), (2, 3), (4, None)]
+    assert _cc(spark, [1, 2, 3], edges) == {1: 1, 2: 2, 3: 2}
+
+
+def test_cc_solver_unpickles_without_the_package(tmp_path):
+    """The one-task solver ships by value: a Python process that cannot
+    import this package unpickles and runs it."""
+    from pyspark import cloudpickle
+
+    blob = tmp_path / "solver.pkl"
+    blob.write_bytes(cloudpickle.dumps(graph._component_solver()))
+    script = (
+        "import pickle, sys\n"
+        "import pandas as pd\n"
+        "f = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "out = f(pd.DataFrame({'_s': [3, 1, 7], '_d': [2, 3, 7]}))\n"
+        "assert not any(m.startswith('gridmr_spark') for m in sys.modules)\n"
+        "print(sorted(zip(out['id'].tolist(), out['component'].tolist())))\n"
+    )
+    env = {"PATH": "/usr/bin:/bin", "HOME": str(tmp_path)}
+    res = subprocess.run(
+        [sys.executable, "-c", script, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "[(1, 1), (2, 1), (3, 1), (7, 7)]"
 
 
 def test_cc_partition_invariant(spark):

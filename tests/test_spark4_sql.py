@@ -124,3 +124,17 @@ def test_sql_udf_is_inlined_into_plan(spark, sf_oracle):
     assert "cast(l_extendedprice" in plan and "decimal(12,2)" in plan
     # and no opaque call survives resolution
     assert "gridmr_disc_price" not in plan
+
+
+def test_sql_scripting_loop_leaves_session_conf_alone(spark, sf_oracle, duck):
+    """The scripting query enables SQL scripting for its own call only: the
+    session's conf is the same after it as before, and it still matches its
+    oracle."""
+    from gridmr_spark.testing import compare_query
+
+    spark.conf.unset("spark.sql.scripting.enabled")
+    before = spark.conf.getAll
+    q = REG["sql_scripting_loop"]
+    df = q.fn(spark, sf_oracle)
+    assert spark.conf.getAll == before
+    assert compare_query(df, duck, q.oracle) == []
