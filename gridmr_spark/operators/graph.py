@@ -26,6 +26,9 @@ them, so the size is known without an extra job.
   doubles per iteration and the driver OOMs planning round ~15. The round's
   changed-label count rides that checkpoint as an ``Observation``, so a
   round is one job, with no separate convergence probe.
+Both regimes run the same rounds, at most ``max_iter``: labels still
+changing in the last round raise rather than come back unsettled, so the
+regime never changes the answer.
 
 Edges with a null endpoint connect nothing and are dropped.
 """
@@ -36,14 +39,18 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-# Largest edge count solved in one task. A million id pairs is tens of MB of
-# Arrow in one Python worker, and at that size the single task still beats
-# the per-round job overhead of the distributed loop.
+# Largest edge count solved in one task: the largest size measured, where
+# one task still won by 6-14x (tools/cc_crossover.py, local[4], sparse graphs
+# of small components, the distributed loop's best case): 2^20 edges in
+# 2.4 s vs 34 s with long ids and 6.9 s vs 43 s with string ids, the Python
+# worker peaking at 283 / 385 MB RSS. The crossover lies above 2^20; it was
+# not searched.
 SMALL_GRAPH_EDGES = 1 << 20
 
 
-def _component_solver():
-    """The one-task solver: pandas (_s, _d) edges -> (id, component).
+def _component_solver(max_iter: int):
+    """The one-task solver: pandas (_s, _d) edges -> (id, component), in at
+    most ``max_iter`` rounds, each the same as one round of ``_propagate``.
 
     Built here as a closure, with its imports inside, so cloudpickle ships it
     by value: workers run it without importing this package."""
@@ -62,7 +69,7 @@ def _component_solver():
         # min id. Each round: min over self and both edge directions, then a
         # pointer jump (label <- label of label).
         lab = np.arange(len(ids))
-        while True:
+        for _ in range(max_iter):
             new = lab.copy()
             np.minimum.at(new, a, lab[b])
             np.minimum.at(new, b, lab[a])
@@ -70,6 +77,9 @@ def _component_solver():
             if np.array_equal(new, lab):
                 return pd.DataFrame({"id": ids, "component": ids[lab]})
             lab = new
+        raise RuntimeError(
+            f"connected_components: labels still changing after {max_iter} rounds"
+        )
 
     return solve
 
@@ -88,7 +98,9 @@ def connected_components(
     vertices allowed). edges: DataFrame with ``src_col``/``dst_col``
     (undirected; direction and duplicates don't matter; endpoints absent
     from ``vertices`` are vertices too). Returns DataFrame[id, component].
-    ``max_iter`` bounds the rounds of the distributed (large) regime.
+    ``max_iter`` bounds the propagation rounds; both regimes run the same
+    rounds and raise ``RuntimeError`` (in the small regime, wrapped in the
+    Python worker's error) when labels still change in the last one.
     """
     e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
     # Both endpoints in one id type: the solver's schema and the union of the
@@ -107,8 +119,9 @@ def connected_components(
         schema = StructType(
             [StructField("id", id_type), StructField("component", id_type)]
         )
+        solve = _component_solver(max_iter)
         labels = (
-            e.groupBy(F.lit(0).alias("_g")).applyInPandas(_component_solver(), schema)
+            e.groupBy(F.lit(0).alias("_g")).applyInPandas(solve, schema)
         ).localCheckpoint()
     else:
         labels = _propagate(e, max_iter)
@@ -122,8 +135,8 @@ def connected_components(
 
 def _propagate(e: DataFrame, max_iter: int) -> DataFrame:
     """The distributed regime: min-label propagation over the checkpointed
-    ``(_s, _d)`` edges, one job per round. Returns DataFrame[id, component]
-    over every endpoint."""
+    ``(_s, _d)`` edges, one job per round, at most ``max_iter`` rounds.
+    Returns DataFrame[id, component] over every endpoint."""
     sym = (
         e.union(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
         .distinct()
@@ -156,9 +169,10 @@ def _propagate(e: DataFrame, max_iter: int) -> DataFrame:
         )
         # Pointer jump: component <- label(component). Labels only take
         # vertex-id values, so the lookup is an equi-join against prop
-        # itself; chasing the label of the label halves chain length each
-        # round, turning O(diameter) convergence into O(log diameter)
-        # (a 30-vertex path converges in ~6 rounds, not 29).
+        # itself; chasing the label of the label shortens label chains each
+        # round (a 30-vertex path settles in ~6 rounds, not 29). It is not
+        # O(log n) in general: random sparse graphs of 2^14 and 2^17 edges
+        # need 32 and 98 rounds.
         mapping = prop.select(
             F.col("id").alias("component"), F.col("component").alias("_jump")
         )
@@ -183,8 +197,10 @@ def _propagate(e: DataFrame, max_iter: int) -> DataFrame:
             .select("id", "component")
         )
         if not changed.get["n"]:  # NULL over zero rows: nothing changed
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after {max_iter} rounds"
+    )
 
 
 def incremental_components(

@@ -912,8 +912,8 @@ def er_resolve_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline_training_data) — and the recursive-CTE oracle proves the
     COMPOSITION end-to-end, the pipeline an MDM/record-linkage user
     actually ships. Scale: blocking is linear with an equi-join shuffle,
-    CC is O(log n) rounds over match edges (sparse: near-identical names
-    only), the final group-by keys on entity id."""
+    CC runs in one task up to graph.SMALL_GRAPH_EDGES match edges (sparse:
+    near-identical names only), the final group-by keys on entity id."""
     from gridmr_spark.operators.graph import connected_components
     from gridmr_spark.operators.text import symdelete_fuzzy_pairs
 

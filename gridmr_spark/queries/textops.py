@@ -1626,7 +1626,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components (pointer-jumping min-label) → one representative
     per cluster (min doc_id). Composes the two proven pieces at their
     production settings — banded candidates (linear shuffle, measured
-    alpha 1.03 at 10x) feeding the O(log diameter) cluster loop — where
+    alpha 1.03 at 10x) feeding the size-chosen cluster solve — where
     dedup_clusters_cc proves the closure on a bounded embedding graph.
     Oracle: DuckDB WITH RECURSIVE closure over the exact Jaccard pair
     definition (minhash verify output equals exact pairs at test SF, which

@@ -47,43 +47,40 @@ def _cc(spark, vertices, edges, id_type="long") -> dict:
     return got
 
 
-def _run(spark, n: int, edges: list[tuple[int, int]]):
-    assert _cc(spark, range(n), edges) == _union_find_components(range(n), edges)
+def _regimes(monkeypatch):
+    """Yield each regime's name with ``SMALL_GRAPH_EDGES`` set for it: the
+    one-task solver, then the distributed round loop, forced by making no
+    graph small enough for one task."""
+    for name, limit in (("one_task", graph.SMALL_GRAPH_EDGES), ("distributed", 0)):
+        monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", limit)
+        yield name
 
 
-@pytest.fixture(params=["one_task", "distributed"])
-def regime(request, monkeypatch):
-    """Run the test in each regime; "distributed" forces the round loop by
-    making no graph small enough for one task."""
-    if request.param == "distributed":
-        monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+def _run(spark, monkeypatch, n: int, edges: list[tuple[int, int]]):
+    want = _union_find_components(range(n), edges)
+    for regime in _regimes(monkeypatch):
+        assert _cc(spark, range(n), edges) == want, regime
 
 
-def test_cc_random_graph(spark):
+def test_cc_random_graph(spark, monkeypatch):
     rng = random.Random(7)
     n = 80
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
-    _run(spark, n, edges)
+    _run(spark, monkeypatch, n, edges)
 
 
-def test_cc_path_graph_high_diameter(spark):
+def test_cc_path_graph_high_diameter(spark, monkeypatch):
     # a 30-vertex path: needs ~log rounds of doubling-free propagation;
     # exercises the convergence loop well past one iteration
-    _run(spark, 30, [(i, i + 1) for i in range(29)])
+    _run(spark, monkeypatch, 30, [(i, i + 1) for i in range(29)])
 
 
-def test_cc_path_and_random_graph_distributed(spark, monkeypatch):
-    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
-    test_cc_path_graph_high_diameter(spark)
-    test_cc_random_graph(spark)
+def test_cc_isolated_and_self_loops(spark, monkeypatch):
+    _run(spark, monkeypatch, 10, [(0, 0), (3, 4), (4, 3)])
 
 
-def test_cc_isolated_and_self_loops(spark):
-    _run(spark, 10, [(0, 0), (3, 4), (4, 3)])
-
-
-def test_cc_no_edges(spark):
-    _run(spark, 5, [])
+def test_cc_no_edges(spark, monkeypatch):
+    _run(spark, monkeypatch, 5, [])
 
 
 def _random_graph(seed: int, to_id):
@@ -100,21 +97,51 @@ def _random_graph(seed: int, to_id):
 @pytest.mark.parametrize(
     "id_type, to_id", [("long", int), ("int", int), ("string", str)]
 )
-def test_cc_regimes_match_union_find(spark, regime, id_type, to_id):
+def test_cc_regimes_match_union_find(spark, monkeypatch, id_type, to_id):
     # string ids compare as strings ("10" < "9"), in Spark and the reference
-    for seed in (1, 2):
-        vertices, edges = _random_graph(seed, to_id)
-        want = _union_find_components(vertices, edges)
-        assert _cc(spark, vertices, edges, id_type) == want
+    graphs = [_random_graph(seed, to_id) for seed in (1, 2)]
     ids = [to_id(i) for i in range(4)]
-    assert _cc(spark, ids, [], id_type) == {i: i for i in ids}
+    graphs.append((ids, []))
+    for vertices, edges in graphs:
+        want = _union_find_components(vertices, edges)
+        for regime in _regimes(monkeypatch):
+            assert _cc(spark, vertices, edges, id_type) == want, regime
 
 
-def test_cc_null_endpoint_drops_the_edge(spark, regime):
+def test_cc_null_endpoint_drops_the_edge(spark, monkeypatch):
     """An edge with a null endpoint connects nothing: 1 stays isolated and 4,
     seen only on such an edge, is not a vertex."""
     edges = [(1, None), (None, 2), (2, 3), (4, None)]
-    assert _cc(spark, [1, 2, 3], edges) == {1: 1, 2: 2, 3: 2}
+    for regime in _regimes(monkeypatch):
+        assert _cc(spark, [1, 2, 3], edges) == {1: 1, 2: 2, 3: 2}, regime
+
+
+def test_cc_max_iter_bounds_both_regimes(spark, monkeypatch):
+    """Both regimes run the same rounds: a 30-vertex path settles in exactly
+    as many rounds as the one-task solver needs, and one round fewer raises
+    instead of returning labels that have not settled."""
+    import pandas as pd
+
+    path = [(i, i + 1) for i in range(29)]
+    pdf = pd.DataFrame(path, columns=["_s", "_d"])
+    rounds = 1
+    while True:
+        try:
+            graph._component_solver(rounds)(pdf)
+            break
+        except RuntimeError:
+            rounds += 1
+    assert rounds > 2  # the bound is exercised, not a one-round graph
+    v = spark.createDataFrame([(i,) for i in range(30)], "id long")
+    e = spark.createDataFrame(path, "src long, dst long")
+    for regime in _regimes(monkeypatch):
+        got = connected_components(v, e, max_iter=rounds).collect()
+        assert {(r["id"], r["component"]) for r in got} == {
+            (i, 0) for i in range(30)
+        }, regime
+        unsettled = f"still changing after {rounds - 1} rounds"
+        with pytest.raises(Exception, match=unsettled):
+            connected_components(v, e, max_iter=rounds - 1)
 
 
 def test_cc_solver_unpickles_without_the_package(tmp_path):
@@ -123,7 +150,7 @@ def test_cc_solver_unpickles_without_the_package(tmp_path):
     from pyspark import cloudpickle
 
     blob = tmp_path / "solver.pkl"
-    blob.write_bytes(cloudpickle.dumps(graph._component_solver()))
+    blob.write_bytes(cloudpickle.dumps(graph._component_solver(25)))
     script = (
         "import pickle, sys\n"
         "import pandas as pd\n"
@@ -141,22 +168,23 @@ def test_cc_solver_unpickles_without_the_package(tmp_path):
     assert res.stdout.strip() == "[(1, 1), (2, 1), (3, 1), (7, 7)]"
 
 
-def test_cc_partition_invariant(spark):
+def test_cc_partition_invariant(spark, monkeypatch):
     # same labeling regardless of how the edge list is partitioned
     rng = random.Random(11)
     n = 50
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(40)]
     vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    results = []
-    for parts in (1, 7):
-        e = spark.createDataFrame(edges, "src long, dst long").repartition(parts)
-        results.append(
-            sorted(
-                (r["id"], r["component"])
-                for r in connected_components(vertices, e).collect()
+    for regime in _regimes(monkeypatch):
+        results = []
+        for parts in (1, 7):
+            e = spark.createDataFrame(edges, "src long, dst long").repartition(parts)
+            results.append(
+                sorted(
+                    (r["id"], r["component"])
+                    for r in connected_components(vertices, e).collect()
+                )
             )
-        )
-    assert results[0] == results[1]
+        assert results[0] == results[1], regime
 
 
 def _numpy_pagerank(n, edges, damping=0.85, iters=10):
